@@ -65,8 +65,37 @@ object RobotsTxt {
     seen.toVector
   }
 
-  def parse(text: String, userAgent: String): RobotsPolicy = {
-    if (text == null || text.isEmpty) return RobotsPolicy.empty
+  /** Parse cap in UTF-8 bytes: RFC 9309 §2.5 requires a crawler to parse
+    * at least 500 KiB, and a site-controlled file must not grow the
+    * cached policy without bound. */
+  val MaxParseBytes: Int = 500 * 1024
+
+  /** The longest prefix of `text` within [[MaxParseBytes]] UTF-8 bytes,
+    * cut after its last line break so no partial line is parsed. */
+  private[core] def capped(text: String): String = {
+    // a UTF-16 char never takes more than 3 UTF-8 bytes
+    if (text.length.toLong * 3 <= MaxParseBytes) return text
+    var bytes = 0L
+    var i = 0
+    while (i < text.length && bytes <= MaxParseBytes) {
+      val c = text.charAt(i)
+      bytes += (if (c < 0x80) 1 else if (c < 0x800 ||
+        Character.isSurrogate(c)) 2 else 3)
+      i += 1
+    }
+    if (bytes <= MaxParseBytes) text
+    else {
+      // char i-1 crossed the cap; keep whole lines before it
+      text.substring(0,
+        text.lastIndexWhere(c => c == '\n' || c == '\r', i - 2) + 1)
+    }
+  }
+
+  /** The policy for `userAgent`, from at most the first
+    * [[MaxParseBytes]] of `txt`. */
+  def parse(txt: String, userAgent: String): RobotsPolicy = {
+    if (txt == null || txt.isEmpty) return RobotsPolicy.empty
+    val text = capped(txt)
     val ua = userAgent.toLowerCase(Locale.ROOT)
 
     // group = (uaTokens, disallow, allow, delayMs)

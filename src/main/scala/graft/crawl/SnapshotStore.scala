@@ -25,7 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   root/manifests/wave-<N>.json  commit record (atomic rename)
   * }}}
   */
-final class SnapshotStore(val root: String) extends FrontierStore {
+class SnapshotStore(val root: String) extends FrontierStore {
 
   private def manifestDir: Path = Paths.get(root, "manifests")
   private def manifestPath(wave: Int): Path =

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import graft.core.{ArticleExtractor, CatalogDetect, UrlCanon}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, StageCache}
 
 /** Internal per-host work row (home fetch result + carried state).
   * Top-level (not nested/private) because Spark's encoder codegen needs
@@ -150,6 +150,18 @@ final case class CrawlConfig(
   * driver-side data are per-host state (≤ seed-list size), per-bucket
   * sketches (bounded by B×S), and the wave's affected-bucket id set
   * (≤ B×S ints, prunes the exact anti-join's build-side scan).
+  *
+  * Cached-leaf rule: every stage the wave reuses is cached through one
+  * [[org.apache.spark.sql.StageCache]], and later stages build on the
+  * returned leaf (the stage's `InMemoryRelation` alone), never on the
+  * stage's own lineage — so the driver analyses and cache-matches each
+  * stage once, not once per downstream Dataset and action. The physical
+  * plans are the ones a plain `.cache()` yields. `runWave` releases all
+  * of a wave's stages in one `finally`, on success and failure alike.
+  * Invariant: no wave may write a path that a cached stage reads (a
+  * wave writes only its own `wave=N` directories and reads earlier
+  * waves' and the pages table); otherwise `CacheManager.recacheByPath`
+  * would rebuild the original's cache entry behind the leaf.
   */
 object WaveEngine {
 
@@ -311,6 +323,24 @@ object WaveEngine {
       def g(i: Int) = if (agg.isNullAt(i)) 0L else agg.getLong(i)
       return WaveResult(wave, g(0), g(1), g(2), g(3), g(4))
     }
+    val stages = new StageCache
+    try crawlWave(spark, store, pages, hosts, robots, wave, cfg, stages)
+    finally stages.release()
+  }
+
+  /** The body of [[runWave]] for a wave not yet committed. Every cached
+    * stage goes through `stages`, whose leaves the caller releases on
+    * every exit path. */
+  private def crawlWave(
+      spark: SparkSession,
+      store: FrontierStore,
+      pages: Dataset[Page],
+      hosts: Dataset[HostConfig],
+      robots: Dataset[RobotsRow],
+      wave: Int,
+      cfg: CrawlConfig,
+      stages: StageCache): WaveResult = {
+    import spark.implicits._
 
     val prevWave = wave - 1
     val prevState: Dataset[HostState] =
@@ -368,12 +398,12 @@ object WaveEngine {
     }
     val homeUniqW = org.apache.spark.sql.expressions.Window
       .partitionBy($"host").orderBy($"fetched_ts".desc, md5($"html"))
-    val homesOk = pages.toDF()
+    // cached: host-sized after the join; saves a second full pages scan
+    val homesOk = stages.leaf(pages.toDF()
       .select($"url".as("home_canon"), $"html", $"warc_ts".as("fetched_ts"))
       .join(broadcast(snapTargets), Seq("home_canon"), "inner")
       .withColumn("rn", row_number().over(homeUniqW))
-      .where($"rn" === 1).drop("rn")
-      .cache() // host-sized after the join; saves a second full pages scan
+      .where($"rn" === 1).drop("rn"))
     val homesMissing = snapTargets
       .join(homesOk.select($"host".as("ok_host")),
         $"host" === $"ok_host", "left_anti")
@@ -428,7 +458,7 @@ object WaveEngine {
     val ua = cfg.userAgent
     val adaptFactor = cfg.adaptiveDelayFactor
     val adaptMaxMs = cfg.adaptiveMaxDelayMs
-    val outcomes: Dataset[HostOutcome] = work.groupByKey(_.host)
+    val outcomes: Dataset[HostOutcome] = stages.leaf(work.groupByKey(_.host)
       .flatMapGroups { (_, it) =>
         it.map { w =>
           w.html match {
@@ -486,7 +516,7 @@ object WaveEngine {
                 homeOk = true, items.size, denied, tasks)
           }
         }
-      }.cache()
+      })
 
     // priority frontier (north rule): when a global per-wave budget is
     // set, rank the cross-host batch by host priority and keep the top
@@ -494,8 +524,8 @@ object WaveEngine {
     // partition keeps its local top-K, the driver merges K rows; no
     // global sort shuffle, no single-partition window)
     val tasksAll = outcomes.flatMap(_.tasks)
-    val tasks: Dataset[FetchTask] =
-      (if (cfg.maxTasksPerWave > 0 && cfg.apportionTasksPerWave) {
+    val tasks: Dataset[FetchTask] = stages.leaf(
+      if (cfg.maxTasksPerWave > 0 && cfg.apportionTasksPerWave) {
         // proportional-fairness budget (CrawlConfig.apportionTasksPerWave):
         // Hamilton-split the budget across the batch's hosts ∝ rank,
         // then keep each host's first `alloc` tasks in schedule order.
@@ -522,7 +552,7 @@ object WaveEngine {
       } else if (cfg.maxTasksPerWave > 0)
         tasksAll.orderBy($"rank".desc, $"host", $"seq")
           .limit(cfg.maxTasksPerWave).as[FetchTask]
-      else tasksAll).cache()
+      else tasksAll)
     // hosts whose ENTIRE batch fell under the budget cut: their
     // checkpoint must revert (deferred, not skipped) — host-sized set
     val budgetDroppedHosts: DataFrame =
@@ -609,7 +639,7 @@ object WaveEngine {
 
     // -- extraction: per-partition batched typed map (byte-identical
     //    text), rule-aware (article-stage overrides)
-    val extractedRaw = queued.select(
+    val extractedRaw = stages.leaf(queued.select(
       $"url", $"host", $"wave", $"seq", $"cat_title", $"published",
       $"html", $"warc_ts", $"rule").as[(String, String, Int, Int, String,
         Option[Timestamp], Array[Byte], Timestamp, Option[RuleSpec])]
@@ -623,15 +653,15 @@ object WaveEngine {
           ArticleRow(url, host, w, seq, title, d.content, d.contentWithTags,
             d.published.map(Timestamp.valueOf).orElse(pub), d.author, wts)
         }
-      }.cache()
+      })
 
     // tasks whose URL is absent from the page snapshot = fetch failures
     // (reference counts them per site, ArticleCrawler.cs:187-196).
     // Anti-join against the CACHED extracted set (≡ fetched urls, since
     // the fetch-join is inner) so the big pages table isn't re-scanned.
-    val fetchFails = tasksDF
+    val fetchFails = stages.leaf(tasksDF
       .join(extractedRaw.toDF().select($"url"), Seq("url"), "left_anti")
-      .select($"host", $"url").as[(String, String)].cache()
+      .select($"host", $"url").as[(String, String)])
 
     // -- unique-fetch contract: the reference performs ONE fetch per
     //    url (UNIQUE article key). A Common-Crawl-style pages table may
@@ -654,8 +684,8 @@ object WaveEngine {
         val uniqW = org.apache.spark.sql.expressions.Window
           .partitionBy($"url", $"host", $"seq")
           .orderBy($"warc_ts".desc, md5($"content"))
-        extractedRaw.toDF().withColumn("rn", row_number().over(uniqW))
-          .where($"rn" === 1).drop("rn").as[ArticleRow].cache()
+        stages.leaf(extractedRaw.toDF().withColumn("rn", row_number().over(uniqW))
+          .where($"rn" === 1).drop("rn").as[ArticleRow])
       }
 
     // -- per-partition lineage rows (north rule) — over the RAW
@@ -712,7 +742,7 @@ object WaveEngine {
     // probe the SAME bucket
     val keyed = extracted.map(a =>
       (SeenFilter.urlBucket(a.url, hb, sl), UrlRef(a.url, a.host, a.seq)))
-    val classified = SeenFilter.probe(keyed, sketches).cache()
+    val classified = stages.leaf(SeenFilter.probe(keyed, sketches))
 
     val definitelyNew = classified.filter(!_._2).map(_._1)
     val maybeSeen = classified.filter(_._2).map(_._1)
@@ -749,9 +779,9 @@ object WaveEngine {
     // bodies with the same gated broadcast as the fetch-join.
     val dedupW = org.apache.spark.sql.expressions.Window
       .partitionBy($"url").orderBy($"host", $"seq")
-    val winners = definitelyNew.unionByName(confirmedNew).toDF()
+    val winners = stages.leaf(definitelyNew.unionByName(confirmedNew).toDF()
       .withColumn("rn", row_number().over(dedupW))
-      .where($"rn" === 1).drop("rn").as[UrlRef].cache()
+      .where($"rn" === 1).drop("rn").as[UrlRef])
     val winnersDF = winners.toDF()
     val newArticles = extracted.toDF()
       .join(if (hintTaskBroadcast) broadcast(winnersDF) else winnersDF,
@@ -776,11 +806,11 @@ object WaveEngine {
             // (articles write + metrics roll-up) — without the cache
             // each re-reads the expired buckets and re-runs the
             // max_by shuffle
-            Some(newArticles.toDF()
+            Some(stages.leaf(newArticles.toDF()
               .select($"url", md5($"contenthtml").as("new_digest"))
               .join(oldDigest, Seq("url"))
               .where($"new_digest" === $"old_digest")
-              .select($"url").cache())
+              .select($"url")))
           case _ => None
         }
       else None
@@ -805,11 +835,11 @@ object WaveEngine {
       .unionByName(fetchFails.toDF("host", "url").select($"host", lit("x").as("k")))
       .unionByName(newStored.toDF().select($"host", lit("i").as("k")))
     // cached: consumed twice (metrics roll-up AND checkpoint finalize)
-    val counts = tagged.groupBy($"host").agg(
+    val counts = stages.leaf(tagged.groupBy($"host").agg(
       count(when($"k" === "s", 1)).as("scheduled"),
       count(when($"k" === "f", 1)).as("fetched_ok"),
       count(when($"k" === "x", 1)).as("task_failed"),
-      count(when($"k" === "i", 1)).as("inserted")).cache()
+      count(when($"k" === "i", 1)).as("inserted")))
     val hostFacts = outcomes.map(o => (o.state.host, o.catalogFound,
       o.robotsDenied, !o.homeOk)).toDF("host", "catalog_found", "robots_denied", "home_failed")
 
@@ -931,7 +961,7 @@ object WaveEngine {
     //    is per-job scheduling latency, not work, and serializing them
     //    was the dominant share of the wave's serial floor (measured
     //    with the BenchProbe job listener).
-    val mCached = metrics.toDF().coalesce(1).cache()
+    val mCached = stages.leaf(metrics.toDF().coalesce(1))
     store.writeNoCount(newStored.toDF(), "articles", wave)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -980,7 +1010,11 @@ object WaveEngine {
       Future(store.writeNoCount(newSeen.toDF().coalesce(1), "seen", wave)),
       Future(store.writeNoCount(mCached, "metrics", wave)),
       Future(store.writeNoCount(lineage.toDF().coalesce(1), "lineage", wave)))
-    smallWrites.foreach(Await.result(_, Duration.Inf))
+    // every write settles before the first failure is rethrown: the
+    // caller releases the cached stages, and a write still running then
+    // would rebuild one behind the release
+    smallWrites.foreach(Await.ready(_, Duration.Inf))
+    smallWrites.foreach(Await.result(_, Duration.Zero))
     def g(i: Int) = if (agg.isNullAt(i)) 0L else agg.getLong(i)
     val nArticles = g(4)
     store.commit(wave, Map(
@@ -990,13 +1024,7 @@ object WaveEngine {
       "seen" -> -1L,
       "seenurls" -> (if (cfg.revalidateOnRecrawl) -1L else nArticles),
       "metrics" -> g(5), "lineage" -> -1L))
-    val res = WaveResult(wave, g(0), g(1), nArticles, g(2), g(3))
-    outcomes.unpersist(); tasks.unpersist(); fetchFails.unpersist()
-    extracted.unpersist(); extractedRaw.unpersist()
-    classified.unpersist(); winners.unpersist()
-    counts.unpersist(); mCached.unpersist(); homesOk.unpersist()
-    revalidatedUrls.foreach(_.unpersist())
-    res
+    WaveResult(wave, g(0), g(1), nArticles, g(2), g(3))
   }
 
   /** Multi-wave driver loop with resume: waves already committed in the

@@ -19,6 +19,17 @@ import org.apache.spark.sql.functions._
   *    recall loss, never precision loss.
   *  - SimHash pairs join on 4×16-bit bands (pigeonhole: hamming ≤ 3
   *    ⇒ ≥1 equal band), verified with bit_count(a^b) in codegen.
+  *
+  * Executor loss: the `localCheckpoint` calls in this object
+  * (the SemDeDup dropped-id side, and the edge and per-round label
+  * tables of the connected components)
+  * keep their blocks only on the executors that computed them, with the
+  * lineage cut. If such an executor is lost before the result is
+  * consumed, the read fails with Spark's "Checkpoint block ... not
+  * found" error instead of recomputing, and the caller re-runs the
+  * operator. That buys flat plans and needs no checkpoint directory; on
+  * a cluster with executor churn, `checkpoint()` to reliable storage is
+  * the fault-tolerant swap (slower: every such table is written out).
   */
 object Dedup {
 

@@ -35,6 +35,17 @@ import org.apache.spark.sql.functions._
   *  - the only driver fetch is ONE node-count scalar per rank job (the
   *    64-bit overflow guard on `base`, which doubles as the warm-up of
   *    the nodes cache); rows never collect.
+  *
+  * Executor loss: the `localCheckpoint` calls in this object
+  * (the per-iteration rank table, and the budget apportionment's
+  * eager result)
+  * keep their blocks only on the executors that computed them, with the
+  * lineage cut. If such an executor is lost before the result is
+  * consumed, the read fails with Spark's "Checkpoint block ... not
+  * found" error instead of recomputing, and the caller re-runs the
+  * operator. That buys flat plans and needs no checkpoint directory; on
+  * a cluster with executor churn, `checkpoint()` to reliable storage is
+  * the fault-tolerant swap (slower: every such table is written out).
   */
 object LinkGraph {
 

@@ -7,12 +7,22 @@ import org.apache.spark.sql.functions._
 /** Column wrappers over the pure URL canonicalization core (UrlCanon) —
   * the north rule's frontier-key functions, usable in any DataFrame
   * plan. Deterministic scalar UDFs (pure string work, no network/DNS),
-  * marked nondeterministic-free so Catalyst can push/dedup them. */
+  * marked nondeterministic-free so Catalyst can push/dedup them.
+  *
+  * Executor loss: the `localCheckpoint` calls in this object
+  * (the hop and per-round pointer tables of redirect resolution)
+  * keep their blocks only on the executors that computed them, with the
+  * lineage cut. If such an executor is lost before the result is
+  * consumed, the read fails with Spark's "Checkpoint block ... not
+  * found" error instead of recomputing, and the caller re-runs the
+  * operator. That buys flat plans and needs no checkpoint directory; on
+  * a cluster with executor churn, `checkpoint()` to reliable storage is
+  * the fault-tolerant swap (slower: every such table is written out).
+  */
 object UrlOps {
 
   private val canonUdf = udf((u: String) => UrlCanon.canonicalize(u))
   private val hostUdf = udf((u: String) => UrlCanon.host(u))
-  private val rootUdf = udf((u: String) => UrlCanon.rootSiteUrl(u))
 
   /** Full canonical form (lowercase scheme/host, default ports stripped,
     * fragment dropped, percent-escapes normalized). */
@@ -20,9 +30,6 @@ object UrlOps {
 
   /** Registered host, lowercased. */
   def host(url: Column): Column = hostUdf(url)
-
-  /** Reference-compatible root-site extraction (HtmlHelper.cs:17-31). */
-  def rootSite(url: Column): Column = rootUdf(url)
 
   /** The dot-suffix chain of a hostname: `a.b.c` →
     * `[a.b.c, b.c, c]` — every domain the host equals or sits under.

@@ -241,7 +241,7 @@ object Warc {
     * `Deflater.end` releases the native zlib state, and per-record
     * members that rely on GC for that leak native memory faster than
     * heap pressure triggers collection (r5 review finding). */
-  private final class MemberGzip(out: OutputStream)
+  private[graft] class MemberGzip(out: OutputStream)
       extends GZIPOutputStream(out, 1 << 16) {
     def endDeflater(): Unit = `def`.end()
   }
@@ -250,12 +250,23 @@ object Warc {
     * onto `out`, as its own gzip member when `gzipPerRecord` — the one
     * definition of record framing shared by every serializer below. */
   private def writeFramed(out: OutputStream, gzipPerRecord: Boolean,
-                          header: Array[Byte], parts: Array[Byte]*): Unit = {
-    val sink = if (gzipPerRecord) new MemberGzip(out) else out
+                          header: Array[Byte], parts: Array[Byte]*): Unit =
+    if (gzipPerRecord) writeMember(new MemberGzip(out), header, parts: _*)
+    else frame(out, header, parts)
+
+  /** One record as gzip member `g`. The Deflater is ended on every exit
+    * path: a sink that throws mid-record (a full disk, a killed task)
+    * must not strand the native zlib state until GC. */
+  private[graft] def writeMember(g: MemberGzip, header: Array[Byte],
+                                 parts: Array[Byte]*): Unit =
+    try { frame(g, header, parts); g.finish() }
+    finally g.endDeflater()
+
+  private def frame(sink: OutputStream, header: Array[Byte],
+                    parts: Seq[Array[Byte]]): Unit = {
     sink.write(header)
     parts.foreach(sink.write)
     sink.write(CRLF); sink.write(CRLF)
-    sink match { case g: MemberGzip => g.finish(); g.endDeflater() case _ => }
   }
 
   /** The shared per-partition segment writer behind [[write]],

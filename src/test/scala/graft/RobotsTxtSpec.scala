@@ -160,4 +160,59 @@ class RobotsTxtSpec extends AnyFunSuite {
       "User-agent: *\nDisallow: *\nAllow: /public/\n", "graftbot")
     assert(q.allows("/public/x") && !q.allows("/private/x"))
   }
+
+  /** Exactly `n` bytes of ASCII comment lines. */
+  private def pad(n: Int): String = {
+    val sb = new StringBuilder
+    var left = n
+    while (left > 100) { sb.append("#").append("x" * 98).append('\n'); left -= 100 }
+    if (left >= 2) sb.append("#").append("x" * (left - 2)).append('\n')
+    else if (left == 1) sb.append('\n')
+    sb.toString
+  }
+  private val Cap = RobotsTxt.MaxParseBytes
+  private val TwoMB = 2 * 1024 * 1024
+  private val head = "User-agent: *\n"
+
+  test("size cap: in a 2 MB file a rule past 500 KiB is ignored") {
+    assert(Cap == 500 * 1024)
+    val rule = "Disallow: /late/\n"
+    val txt = head + "Disallow: /early/\n" + pad(600 * 1024) + rule +
+      pad(TwoMB - 600 * 1024)
+    assert(txt.length > TwoMB)
+    val p = RobotsTxt.parse(txt, "graftbot")
+    assert(p.disallow == Seq("/early/"))
+    assert(!p.allows("/early/x") && p.allows("/late/x"))
+    // the cap counts UTF-8 bytes, not chars: 200k three-byte chars fill it
+    val wide = head + "# " + "\u4e2d" * 200000 + "\n" + rule
+    assert(RobotsTxt.parse(wide, "graftbot").allows("/late/x"))
+  }
+
+  test("size cap: a rule ending at the cap's last byte is honoured, a straddling line is dropped") {
+    val rule = "Disallow: /edge/\n"
+    val inside = head + pad(Cap - head.length - rule.length) + rule
+    assert(inside.length == Cap)
+    val p = RobotsTxt.parse(inside + pad(TwoMB), "graftbot")
+    assert(!p.allows("/edge/x"), "a rule inside the cap must hold")
+    // "Disallow: /str" fits under the cap, the rest of the line does not;
+    // parsing the fragment would wrongly block /straddle/
+    val straddle = head + pad(Cap - head.length - 14) +
+      "Disallow: /straddle/\n" + pad(TwoMB)
+    val q = RobotsTxt.parse(straddle, "graftbot")
+    assert(q.disallow.isEmpty && q.allows("/straddle/x"))
+  }
+
+  test("size cap: a file under the cap parses exactly as before") {
+    val rules = "Disallow: /a/\nAllow: /a/ok\nCrawl-delay: 2\n"
+    val plain = RobotsTxt.parse(head + rules, "graftbot")
+    assert(plain == RobotsPolicy(Seq("/a/"), Seq("/a/ok"), Some(2000L)))
+    // padded to just under the cap, rules last
+    val big = head + pad(Cap - head.length - rules.length) + rules
+    assert(big.length == Cap)
+    assert(RobotsTxt.parse(big, "graftbot") == plain)
+    // two-byte chars: more chars than the 3-byte fast path admits, still
+    // under the byte cap, so nothing is cut
+    val wide = head + "# " + "\u00e9" * 200000 + "\n" + rules
+    assert(RobotsTxt.parse(wide, "graftbot") == plain)
+  }
 }

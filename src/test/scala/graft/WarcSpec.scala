@@ -270,4 +270,29 @@ class WarcSpec extends AnyFunSuite {
     assert(obj("links") == Vector("http://a.example.org/2", "http://b.example.org/x"))
     assert(json.startsWith("""{"url":"""), "fixed key order is the contract")
   }
+
+  test("a sink that throws mid-record still ends the gzip member's Deflater") {
+    // accepts the 10-byte gzip header, then fails like a full disk
+    val failing = new java.io.OutputStream {
+      private var n = 0
+      def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        n += len
+        if (n > 10) throw new java.io.IOException("disk full")
+      }
+    }
+    class Probe(out: java.io.OutputStream) extends Warc.MemberGzip(out) {
+      def ended: Boolean =
+        try { `def`.getBytesRead; false }
+        catch { case _: NullPointerException => true } // "Deflater has been closed"
+    }
+    assert(!new Probe(new ByteArrayOutputStream()).ended, "probe sees a live Deflater")
+    val payload = new Array[Byte](1 << 20) // incompressible: deflate emits mid-write
+    new scala.util.Random(7).nextBytes(payload)
+    val member = new Probe(failing)
+    val err = intercept[java.io.IOException](
+      Warc.writeMember(member, "WARC/1.0\r\n".getBytes(UTF_8), payload))
+    assert(err.getMessage == "disk full")
+    assert(member.ended, "the member's native zlib state must be released on error")
+  }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.time.LocalDateTime
 
 import graft.core.{CatalogItem, RobotsPolicy}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Edge behaviors of the wave engine pinned by the round-3 review:
@@ -915,6 +915,27 @@ class WaveEdgeSpec extends AnyFunSuite {
     assert(crawled.contains(clean), "an unflagged scanned host must crawl")
     assert(crawled.contains(FixtureGen.hostName(0)),
       "a host absent from the trap scan must crawl normally")
+  }
+
+  test("a failing commit write releases every cached wave stage") {
+    // one of the concurrent small-table writes fails; the articles
+    // write before it has already materialized the shared stages
+    val failing = new SnapshotStore(
+        Files.createTempDirectory("edgefail").toString) {
+      override def writeNoCount(df: DataFrame, table: String, wave: Int): Unit =
+        if (table == "state") throw new java.io.IOException("injected state write failure")
+        else super.writeNoCount(df, table, wave)
+    }
+    // the session is shared across suites: start from an empty cache
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val err = intercept[java.io.IOException](runAll(failing, 1))
+    assert(err.getMessage == "injected state write failure")
+    assert(!failing.isCommitted(0))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"persisted RDDs left: ${spark.sparkContext.getPersistentRDDs.keys}")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a cached wave stage outlived the failed wave")
   }
 }
 
