@@ -53,27 +53,6 @@ object Bench {
     }
   }
 
-  private def session(cpus: Int, engineMode: Boolean): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill scratch under a managed dir so a killed run
-      // can't leak block-manager files (see TempDirs)
-      .config("spark.local.dir", TempDirs.cleanupOnExit(
-        Files.createTempDirectory("benchlocal").toString))
-    // Crawl-engine sessions disable AQE: the engine sets its partition
-    // counts explicitly, and AQE's per-query-stage job materialization
-    // adds one scheduling round-trip per exchange — measured ~2.5× the
-    // per-wave job count (89 vs 34) and ~35% wall at micro-wave sizes.
-    // The relational query surface (part 1) keeps cluster defaults.
-    if (engineMode) b.config("spark.sql.adaptive.enabled", "false")
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** One crawl benchmark run: fresh store, `waves` waves over the
     * synthetic fixture; returns (urls, seconds, taskRunSec, taskCpuSec).
     * Input snapshots are materialized to parquet BEFORE the clock starts
@@ -126,12 +105,12 @@ object Bench {
   /** Throughput (docs/s) of the engine's CPU-dominant kernel —
     * charset-decode + article extraction — across `threads` JVM threads,
     * on deterministic fixture pages: the machine-deliverable parallelism
-    * for the pipeline's actual (string/allocation-heavy) work profile. */
-  private def extractThroughput(threads: Int): Double = {
+    * for the pipeline's actual (string/allocation-heavy) work profile.
+    * Also the kernel [[KernelProbe]] sweeps. */
+  private[graft] def extractThroughput(threads: Int, rounds: Int = 3): Double = {
     val fx = FixtureCfg(nHosts = 16, baseArticles = 60)
     val docs = (0 until 16).flatMap(i => (0 until 60).map(j =>
       FixtureGen.articleHtml(fx, i, j).getBytes("UTF-8"))).toArray
-    val rounds = 3
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     val t0 = System.nanoTime()
     val futs = (0 until threads).map { _ =>
@@ -158,6 +137,13 @@ object Bench {
     threads.toDouble * rounds * docs.length / sec
   }
 
+  /** Indices of the (at most) `max` pairs with the best pair
+    * efficiency, in pair order: the capped `samples_n`, `samples_4n`
+    * and `pair_efficiencies` arrays are all emitted from these, so
+    * position i of each is the same pair. */
+  private[graft] def bestPairs(pairEffs: Array[Double], max: Int): Seq[Int] =
+    pairEffs.indices.sortBy(i => -pairEffs(i)).take(max).sorted
+
   // ---- artifact guarantee ------------------------------------------
   // The driver's contract is ONE parseable JSON line on stdout. A
   // timed-out run used to print NOTHING (the line only printed at the
@@ -179,7 +165,7 @@ object Bench {
     * is not valid JSON at all, so the budget is enforced here instead
     * of relying on tail-salvage): if the full render overflows, the
     * per-query timings degrade from 2 decimals to 1 (~100 chars), and
-    * then the crawl sample arrays cap to their best 2 readings (the
+    * then the crawl sample arrays cap to their best 2 pairs (the
     * `pairs` field always carries the TRUE pair count, so evidence of
     * how many pairs ran survives the elision). Field order is a second
     * line of defense: `queries` leads and the headline metric plus the
@@ -223,7 +209,7 @@ object Bench {
     }))
 
     // ---- part 1: query surface at local[32] -------------------------
-    var spark = session(32, engineMode = false)
+    var spark = LocalSpark.session(32)
     // JIT/codegen warm-up outside any per-query timing
     spark.range(1000000).selectExpr("sum(id)").collect()
     val errs0 = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -375,18 +361,12 @@ object Bench {
       // cannot (a turbo window that blesses only the 1-core samples
       // deflates the best-of ratio while every pair read was fine)
       val pairEffs = aLo.zip(aHi).map { case (l, h) => (l.sec / h.sec) / 4.0 }
-      // under the render budget the arrays cap to the best readings
-      // (uncapped they stay in pair order, positionally aligned); the
-      // scalar fields (best-of, best-pair, `pairs` count) always
-      // summarize ALL samples
-      def arr(a: Array[Run]) = {
-        val vs = if (a.length <= maxSamples) a.map(_.sec)
-                 else a.map(_.sec).sorted.take(maxSamples)
-        vs.map(v => f"$v%.1f").mkString("[", ",", "]")
-      }
-      val pe = if (pairEffs.length <= maxSamples) pairEffs
-               else pairEffs.sorted.reverse.take(maxSamples)
-      val pairArr = pe.map(v => f"$v%.3f").mkString("[", ",", "]")
+      // under the render budget the arrays cap to the same best pairs
+      // (see bestPairs); the scalar fields (best-of, best-pair, `pairs`
+      // count) always summarize ALL samples
+      val keep = bestPairs(pairEffs, maxSamples)
+      def arr(v: Int => Double, fmt: String) =
+        keep.map(i => fmt.format(v(i))).mkString("[", ",", "]")
       f"""{"n_cores":$nLo,"n4_cores":$nHi,"urls":$urls,""" +
         f""""sec_n":${bestLo.sec}%.2f,"ups_n":$upsLo%.1f,""" +
         f""""sec_4n":${bestHi.sec}%.2f,"ups_4n":$upsHi%.1f,""" +
@@ -408,8 +388,9 @@ object Bench {
         f""""scaling_efficiency_vs_kernel":$effKernel%.3f,""" +
         f""""scaling_efficiency_best_pair":${pairEffs.max}%.3f,""" +
         s""""pairs":${aLo.length},""" + // true pair count (r3 schema field)
-        s""""pair_efficiencies":$pairArr,""" +
-        f""""samples_n":${arr(aLo)},"samples_4n":${arr(aHi)}}"""
+        s""""pair_efficiencies":${arr(pairEffs(_), "%.3f")},""" +
+        s""""samples_n":${arr(aLo(_).sec, "%.1f")},""" +
+        s""""samples_4n":${arr(aHi(_).sec, "%.1f")}}"""
     }
 
 
@@ -452,7 +433,7 @@ object Bench {
       // samples from both pair positions
       def runLevel(n: Int): (Long, Double, Double, Double) = {
         (if (n == nLo) calLo else calHi) += spinThroughput(n)
-        spark = session(n, engineMode = true)
+        spark = LocalSpark.session(n, LocalSpark.EngineConfs: _*)
         val r = crawlRun(spark, fx, waves, cc, pagesDir)
         spark.stop()
         r

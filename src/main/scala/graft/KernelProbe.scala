@@ -1,52 +1,20 @@
 package graft
 
-import graft.crawl.{FixtureCfg, FixtureGen}
-
 /** Thread-sweep of the CPU-dominant extract kernel (charset decode +
   * article extraction) — locates the host's memory-bandwidth knee so the
   * scaling-pair (N, 4N) can be chosen where ~4× parallel speedup is
   * physically deliverable. Lab tool, not part of the driver contract. */
 object KernelProbe {
 
-  private def extractThroughput(threads: Int, rounds: Int): Double = {
-    val fx = FixtureCfg(nHosts = 16, baseArticles = 60)
-    val docs = (0 until 16).flatMap(i => (0 until 60).map(j =>
-      FixtureGen.articleHtml(fx, i, j).getBytes("UTF-8"))).toArray
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    val t0 = System.nanoTime()
-    val futs = (0 until threads).map { _ =>
-      pool.submit(new java.util.concurrent.Callable[Long] {
-        def call(): Long = {
-          var n = 0L; var r = 0
-          while (r < rounds) {
-            var k = 0
-            while (k < docs.length) {
-              n += graft.core.ArticleExtractor.extract(
-                graft.core.CharsetDetect.decode(docs(k))).content.length
-              k += 1
-            }
-            r += 1
-          }
-          n
-        }
-      })
-    }
-    val sink = futs.map(_.get()).sum
-    val sec = (System.nanoTime() - t0) / 1e9
-    pool.shutdown()
-    if (sink == -1) System.err.println("")
-    threads.toDouble * rounds * docs.length / sec
-  }
-
   def main(args: Array[String]): Unit = {
     val levels = if (args.nonEmpty) args.map(_.toInt).toSeq
       else Seq(1, 2, 4, 8, 16, 32)
-    extractThroughput(4, 2) // JIT warm
+    Bench.extractThroughput(4, rounds = 2) // JIT warm
     val reps = 3
     val best = scala.collection.mutable.Map.empty[Int, Double]
     (0 until reps).foreach { _ =>
       levels.foreach { n =>
-        val t = extractThroughput(n, 3)
+        val t = Bench.extractThroughput(n)
         best(n) = math.max(best.getOrElse(n, 0.0), t)
       }
     }

@@ -2,10 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Lab tool (NOT driver contract — like [[BenchProbe]]): the r5
+/** Lab tool (NOT driver contract — like [[KernelProbe]]): the r5
   * endurance sweep. The oracle gate runs at sf0.01 and the repo's own
   * 10× guard at sf0.1; this tool adds ONE MORE DECADE by synthesizing
   * an sf1-scale documents/embeddings pair from the sf0.1 testdata
@@ -38,15 +37,7 @@ object ScaleSweep {
     val out = args.lift(1).getOrElse(
       Files.createTempDirectory("graft_sf1").toString)
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", TempDirs.cleanupOnExit(
-        Files.createTempDirectory("sweeplocal").toString))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(32)
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val docBase = docs.agg(max("doc_id")).head().getLong(0) + 1

@@ -48,19 +48,12 @@ object SparkEntry {
           expectedUrlsPerBucket = 2048, cuckooCapacityPerBucket = 4096)
         val pagesDir = TempDirs.cleanupOnExit(
           java.nio.file.Files.createTempDirectory("entrypages").toString)
-        // micro-wave run: skip whole-stage codegen (typed hot path);
-        // restore session confs afterwards for the relational queries
-        val oldCg = s.conf.get("spark.sql.codegen.wholeStage", "true")
-        val oldAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.codegen.wholeStage", "false")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        try
+        // micro-wave confs for the crawl only; the relational queries
+        // keep the session's own
+        LocalSpark.withConf(s, LocalSpark.MicroWaveConfs: _*) {
           crawl.WaveEngine.run(s, new crawl.SnapshotStore(dir),
             w => crawl.FixtureGen.pagesParquet(s, fx, w, pagesDir),
             crawl.FixtureGen.hosts(s, fx), crawl.FixtureGen.robots(s, fx), 2, cc)
-        finally {
-          s.conf.set("spark.sql.codegen.wholeStage", oldCg)
-          s.conf.set("spark.sql.adaptive.enabled", oldAqe)
         }
         crawlDir.set(dir)
       }

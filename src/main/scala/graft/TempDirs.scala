@@ -17,8 +17,7 @@ object TempDirs {
   /** Scratch-dir name prefixes owned by this library's mains/tests. */
   private val prefixes = Seq(
     "benchpages", "benchstore", "warmpages",
-    "probepages", "probestore", "probewarm",
-    "entrypages", "entrycrawl", "planpages", "benchlocal")
+    "entrypages", "entrycrawl", "planpages", "sparklocal")
 
   private def deleteRec(f: File): Unit = {
     if (f.isDirectory) {

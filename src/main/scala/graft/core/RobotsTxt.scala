@@ -49,11 +49,12 @@ object RobotsTxt {
     * RFC 9309 §2.3 / sitemaps.org these are GLOBAL — independent of any
     * user-agent group — so they are extracted separately from the
     * policy [[parse]] (whose per-UA result the engine caches); values
-    * are absolute sitemap URLs to feed [[graft.sources.Sitemap.read]]. */
+    * are absolute sitemap URLs to feed [[graft.sources.Sitemap.read]].
+    * Reads at most the first [[MaxParseBytes]] of `text`, like [[parse]]. */
   def sitemaps(text: String): Seq[String] = {
     if (text == null || text.isEmpty) return Nil
     val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    text.linesIterator.foreach { raw =>
+    capped(text).linesIterator.foreach { raw =>
       val line = { val h = raw.indexOf('#'); if (h >= 0) raw.substring(0, h) else raw }.trim
       val ci = line.indexOf(':')
       if (ci > 0 &&

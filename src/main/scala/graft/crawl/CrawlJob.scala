@@ -1,5 +1,6 @@
 package graft.crawl
 
+import graft.LocalSpark
 import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point for the crawl engine.
@@ -59,10 +60,9 @@ object CrawlJob {
     val builder = SparkSession.builder()
       .appName("graft-crawl")
       .config("spark.sql.session.timeZone", "UTC")
-      // AQE off for the engine by default (SCALE.md §8): partitioning
-      // is explicit and AQE's per-exchange query-stage jobs add a
-      // scheduling round-trip per wave stage; --aqe true to override
-      .config("spark.sql.adaptive.enabled", opts.getOrElse("aqe", "false"))
+      // the engine's session confs (AQE off); --aqe true to override
+      .config(LocalSpark.EngineConfs.toMap ++
+        opts.get("aqe").map(LocalSpark.Aqe -> _))
     // spark-submit provides the master in production; `--master` is the
     // local smoke-run escape hatch (e.g. --master local[8]), and
     // `--shuffle-partitions` its companion (a local[4] smoke at the

@@ -116,7 +116,12 @@ final case class CrawlConfig(
     // S5 browser-proxy seam: the external rendering service hosts whose
     // rule sets `RuleSpec.browser_fetch` fetch through (see
     // [[RenderFetcher]]). None (default) = no service bound; flagged
-    // hosts then fall back to the static snapshot fetch.
+    // hosts then fall back to the static snapshot fetch. Once bound,
+    // EVERY page of a flagged host, home included, comes from the
+    // service (the reference proxies every page of a BrowserProxy
+    // site): during a service outage a flagged host's home fetch fails
+    // and the host is marked broken, even when the snapshot holds its
+    // home page.
     renderFetcher: Option[RenderFetcher] = None)
 
 /** One wave of the crawl — the Spark re-expression of the reference's
@@ -960,7 +965,7 @@ object WaveEngine {
     //    CONCURRENT driver jobs — at micro-wave sizes each write's cost
     //    is per-job scheduling latency, not work, and serializing them
     //    was the dominant share of the wave's serial floor (measured
-    //    with the BenchProbe job listener).
+    //    with a per-job SparkListener).
     val mCached = stages.leaf(metrics.toDF().coalesce(1))
     store.writeNoCount(newStored.toDF(), "articles", wave)
     import scala.concurrent.{Await, Future}

@@ -90,7 +90,13 @@ object Dedup {
     * also found through the documents' rarer shingles (or is not a
     * near-dup at all). 1000 keeps every genuine near-dup cluster the
     * fixtures plant (df ≤ 5) by three orders of magnitude while
-    * bounding any single shingle's fan-out at 10⁶ pairs. */
+    * bounding any single shingle's fan-out at 10⁶ pairs.
+    *
+    * The cap has a miss case: a cluster of more than 1000 documents
+    * whose shingles are ALL shared by the whole cluster (e.g. identical
+    * short docs) has no rarer shingle to fall back on, so every one of
+    * its pairs is dropped. Pass `maxShingleDf = Int.MaxValue` where such
+    * clusters must be found. */
   val DefaultShingleDfCap = 1000
 
   private val capMetricSeq = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import graft.crawl.{FixtureCfg, FixtureGen}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,16 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * dimension/task sides, and column pruning on the pages table. */
 class PlanSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark = LocalSpark.session(4)
 
   val dir = "/root/testdata/sf0.001"
 
@@ -97,14 +87,12 @@ class PlanSpec extends AnyFunSuite {
     // with size-estimate auto-broadcast off (the at-scale situation —
     // a huge batch estimates over any threshold) the url join must plan
     // as a SHUFFLE join, not a forced driver-side broadcast
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    LocalSpark.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = planOf(graft.crawl.WaveEngine.fetchJoin(
         pages, tasks, rules, hintBroadcast = false))
       assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
         "unhinted fetch-join must shuffle on url: " + plan.take(3000))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("ann lsh bucket is a projection: no join anywhere in the q28 plan") {

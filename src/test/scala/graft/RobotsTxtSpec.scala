@@ -188,6 +188,13 @@ class RobotsTxtSpec extends AnyFunSuite {
     assert(RobotsTxt.parse(wide, "graftbot").allows("/late/x"))
   }
 
+  test("size cap: sitemaps reads the same prefix as parse") {
+    val txt = "Sitemap: http://a.example/early.xml\n" + pad(600 * 1024) +
+      "Sitemap: http://a.example/late.xml\n" + pad(TwoMB - 600 * 1024)
+    assert(txt.length > TwoMB)
+    assert(RobotsTxt.sitemaps(txt) == Seq("http://a.example/early.xml"))
+  }
+
   test("size cap: a rule ending at the cap's last byte is honoured, a straddling line is dropped") {
     val rule = "Disallow: /edge/\n"
     val inside = head + pad(Cap - head.length - rule.length) + rule

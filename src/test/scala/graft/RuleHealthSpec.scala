@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import graft.core._
 import graft.crawl.HostHealth
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Units for the coverage-gap modules: charset sniffing (U11), rule-
@@ -12,16 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * assist (U12), JSON parsing, host-health classification (F7/F8). */
 class RuleHealthSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark = LocalSpark.session(4)
 
   test("charset: meta sniff round-trips GB2312 bytes") {
     val html = """<html><head><meta http-equiv="Content-Type" """ +

@@ -2,17 +2,11 @@ package graft
 
 import graft.core.RobotsTxt
 import graft.sources.Sitemap
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class SitemapSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = LocalSpark.session(4)
 
   test("urlset parse: loc/lastmod/changefreq/priority, optional fields null") {
     val rows = Sitemap.parseRecords(

@@ -1,18 +1,12 @@
 package graft
 
 import graft.ops.Sketches
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class SketchesSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = LocalSpark.session(4)
 
   // ---- Misra–Gries amortization (ADVICE r4) -------------------------
   // The decrement branch is O(k) per firing but fires <= n/k times (each

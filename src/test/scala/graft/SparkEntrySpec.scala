@@ -1,16 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class SparkEntrySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = LocalSpark.session(4)
 
   val dir = "/root/testdata/sf0.001"
 
@@ -281,6 +275,16 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(capped == uncapped)
   }
 
+  test("shingle df-cap miss case: more than 1000 identical short docs " +
+      "pair only with the cap off") {
+    import spark.implicits._
+    val n = 1001
+    val docs = (0 until n).map(i => (i.toLong, "aa bb cc")).toDF("doc_id", "text")
+    assert(graft.ops.Dedup.ngramJaccardPairs(docs).count() == 0)
+    assert(graft.ops.Dedup.ngramJaccardPairs(docs, maxShingleDf = Int.MaxValue)
+      .count() == n * (n - 1) / 2)
+  }
+
   test("shingle df-cap is ON by default: a stop-shingle corpus prunes " +
       "the hot bucket and reports the capped count") {
     import spark.implicits._
@@ -309,9 +313,7 @@ class SparkEntrySpec extends AnyFunSuite {
     // query stage whose metrics the final QueryExecution traversal
     // misses (observe + AQE rough edge) — the metric is a monitoring
     // aid, and the plan-level pin lives in PlanSpec either way
-    val oldAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    try LocalSpark.withConf(spark, LocalSpark.Aqe -> "false") {
       assert(graft.ops.Dedup.ngramJaccardPairs(docs).count() == 0)
       // QueryExecutionListener delivery is async — poll briefly
       val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
@@ -320,10 +322,7 @@ class SparkEntrySpec extends AnyFunSuite {
         .MapHasAsScala(seen).asScala.values.toSeq
       assert(vals.contains(1L),
         s"exactly one hot shingle must be reported capped, got $seen")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
-      spark.listenerManager.unregister(listener)
-    }
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("semanticDedup skew guard fails loudly; scaled variant bounds fan-out") {
@@ -473,22 +472,15 @@ class SparkEntrySpec extends AnyFunSuite {
     // exchange is a job of its own — both make raw job counts
     // meaningless as an ACTION count. Pin the per-action contract with
     // AQE + auto-broadcast off (1 action ⇒ 1 job).
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val abj = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val measured =
-      try {
+      try LocalSpark.withConf(spark, LocalSpark.Aqe -> "false",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val got = graft.ops.Dedup.dupClusters(pairs).collect()
         assert(got.map(r => (r.getLong(0), r.getLong(1))).toSet ==
           Set((1L, 1L), (2L, 1L)))
         Thread.sleep(500) // listener drain
         jobs.get
-      } finally {
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abj)
-        spark.sparkContext.removeSparkListener(l)
-      }
+      } finally spark.sparkContext.removeSparkListener(l)
     // fixed actions: edges checkpoint, isEmpty, label-init checkpoint,
     // final collect = 4; rounds: 2 × 1 (the changed-count rides the
     // round's checkpoint-materializing action). The pre-fold

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, StageCache}
+import org.apache.spark.sql.StageCache
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,16 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** `StageCache.leaf`: a persisted stage handed back as a plan leaf. */
 class StageCacheSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark = LocalSpark.session(4)
 
   /** Start from an empty cache: the session is shared across suites. */
   private def clearCaches(): Unit = {
@@ -62,10 +53,8 @@ class StageCacheSpec extends AnyFunSuite {
   test("a join of two leaves plans the same physical operators as the join of the cached originals") {
     import spark.implicits._
     clearCaches()
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val stages = new StageCache
-    try {
+    try LocalSpark.withConf(spark, LocalSpark.Aqe -> "false") {
       val a = spark.range(0, 2000).select($"id".as("k"), ($"id" * 2).as("v"))
       val b = spark.range(0, 50).select($"id".as("k"), $"id".cast("string").as("s"))
         .groupBy($"k").agg(org.apache.spark.sql.functions.max($"s").as("s"))
@@ -81,10 +70,7 @@ class StageCacheSpec extends AnyFunSuite {
         .count(_ == "InMemoryTableScan") == 2)
       assert(overLeaves.collect().map(_.toString).sorted.toSeq ==
         overOriginals.collect().map(_.toString).sorted.toSeq)
-    } finally {
-      stages.release()
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
+    } finally stages.release()
     assertNothingCached()
   }
 

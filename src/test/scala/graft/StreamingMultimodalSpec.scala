@@ -4,22 +4,12 @@ import java.sql.Timestamp
 
 import graft.ops.Multimodal
 import graft.streaming.StreamOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingMultimodalSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark = LocalSpark.session(4)
 
   private def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
 
@@ -83,35 +73,31 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     // micro-plan sizes: avoid per-batch janino compiles (SCALE.md §8)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val fx = crawl.FixtureCfg(nHosts = 12, baseArticles = 4,
-      growthPerWave = 2, hotHostFactor = 2)
-    val cc = crawl.CrawlConfig(hostBuckets = 4, salt = 2,
-      expectedUrlsPerBucket = 1024, cuckooCapacityPerBucket = 2048)
-    val store = new crawl.SnapshotStore(
-      java.nio.file.Files.createTempDirectory("streamcrawl").toString)
-    val mem = MemoryStream[crawl.Page]
-    val q = graft.streaming.CrawlStream.start(spark, store, mem.toDS(),
-      crawl.FixtureGen.hosts(spark, fx), crawl.FixtureGen.robots(spark, fx),
-      cc, java.nio.file.Files.createTempDirectory("streamck").toString,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-    try {
-      mem.addData(crawl.FixtureGen.pages(spark, fx, 0).collect().toSeq)
-      q.processAllAvailable()
-      assert(store.lastCommittedWave.contains(0))
-      mem.addData(crawl.FixtureGen.pages(spark, fx, 1).collect().toSeq)
-      q.processAllAvailable()
-      assert(store.lastCommittedWave.contains(1))
-      val arts = store.readDeltas(spark, "articles", 1).get
-      assert(arts.count() > 0)
-      // wave ids came from batch ids; per-wave metrics exist for both
-      assert(store.read(spark, "metrics", 0).count() > 0)
-      assert(store.read(spark, "metrics", 1).count() > 0)
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    LocalSpark.withConf(spark, LocalSpark.MicroWaveConfs: _*) {
+      val fx = crawl.FixtureCfg(nHosts = 12, baseArticles = 4,
+        growthPerWave = 2, hotHostFactor = 2)
+      val cc = crawl.CrawlConfig(hostBuckets = 4, salt = 2,
+        expectedUrlsPerBucket = 1024, cuckooCapacityPerBucket = 2048)
+      val store = new crawl.SnapshotStore(
+        java.nio.file.Files.createTempDirectory("streamcrawl").toString)
+      val mem = MemoryStream[crawl.Page]
+      val q = graft.streaming.CrawlStream.start(spark, store, mem.toDS(),
+        crawl.FixtureGen.hosts(spark, fx), crawl.FixtureGen.robots(spark, fx),
+        cc, java.nio.file.Files.createTempDirectory("streamck").toString,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      try {
+        mem.addData(crawl.FixtureGen.pages(spark, fx, 0).collect().toSeq)
+        q.processAllAvailable()
+        assert(store.lastCommittedWave.contains(0))
+        mem.addData(crawl.FixtureGen.pages(spark, fx, 1).collect().toSeq)
+        q.processAllAvailable()
+        assert(store.lastCommittedWave.contains(1))
+        val arts = store.readDeltas(spark, "articles", 1).get
+        assert(arts.count() > 0)
+        // wave ids came from batch ids; per-wave metrics exist for both
+        assert(store.read(spark, "metrics", 0).count() > 0)
+        assert(store.read(spark, "metrics", 1).count() > 0)
+      } finally q.stop()
     }
   }
 

@@ -4,17 +4,11 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.sources.Warc
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class WarcSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = LocalSpark.session(4)
 
   private def parse(bytes: Array[Byte]): List[graft.sources.WarcRow] =
     new Warc.RecordIterator(new ByteArrayInputStream(bytes), "t.warc").toList

@@ -2,7 +2,7 @@ package graft.crawl
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives the spark-submit entry point's body ([[CrawlJob.run]])
@@ -10,18 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * snapshot-resume, and the `--delete-hosts` S9 maintenance mode. */
 class CrawlJobSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.wholeStage", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark = LocalSpark.session(4, LocalSpark.MicroWaveConfs: _*)
 
   private val base = Map(
     "hosts" -> "12", "base" -> "5", "growth" -> "2", "hot" -> "2",

@@ -2,7 +2,7 @@ package graft.crawl
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SparkSession}
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end equivalence of the distributed wave engine against the
@@ -10,20 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * politeness and skew contracts. */
 class CrawlPipelineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // micro-wave latency: the hot path is typed mapPartitions, so
-      // whole-stage codegen only adds per-plan janino compiles here
-      .config("spark.sql.codegen.wholeStage", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark = LocalSpark.session(4, LocalSpark.MicroWaveConfs: _*)
 
   val fx = FixtureCfg(nHosts = 12, baseArticles = 6, growthPerWave = 3,
     hotHostFactor = 3)

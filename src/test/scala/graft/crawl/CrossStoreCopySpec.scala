@@ -1,6 +1,6 @@
 package graft.crawl
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** RUNTIME exercise of the S11 cross-store copy seam. Round-2 verdict
@@ -22,16 +22,7 @@ class CrossStoreCopySpec extends AnyFunSuite {
 
   System.setProperty("derby.stream.error.field", "java.lang.System.err")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark = LocalSpark.session(4)
 
   private val Driver = "org.apache.derby.jdbc.EmbeddedDriver"
   private def ep(url: String) =

@@ -3,8 +3,9 @@ package graft.crawl
 import java.nio.file.Files
 import java.time.LocalDateTime
 
+import graft.LocalSpark
 import graft.core.{CatalogItem, RobotsPolicy}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Edge behaviors of the wave engine pinned by the round-3 review:
@@ -13,18 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the S9 host-delete cascade. */
 class WaveEdgeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.wholeStage", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark = LocalSpark.session(4, LocalSpark.MicroWaveConfs: _*)
 
   val fx = FixtureCfg(nHosts = 12, baseArticles = 6, growthPerWave = 3,
     hotHostFactor = 3)
@@ -720,6 +710,27 @@ class WaveEdgeSpec extends AnyFunSuite {
       s"unbound fetcher must degrade to snapshot fetch, got $r2")
   }
 
+  test("S5 seam: a render-service outage marks a browser-ruled host broken, snapshot home or not") {
+    import spark.implicits._
+    val host = "down.example.com"
+    val hosts = spark.createDataset(Seq(
+      HostConfig(1, host, s"http://$host/", 1, enabled = true, 100L, 1,
+        rule = Some(RuleSpec("XPath", "//ul/li[*]/a", browser_fetch = true)))))
+    val robots = spark.createDataset(Seq(FixtureGen.RobotsRow(host, "")))
+    val home = spark.createDataset(Seq(Page(s"http://$host/",
+      java.sql.Timestamp.valueOf("2024-06-01 00:00:00"),
+      "<html><body><ul></ul></body></html>".getBytes("UTF-8"), "", "en")))
+    val s = newStore()
+    val r = WaveEngine.runWave(spark, s, home, hosts, robots, 0,
+      cc.copy(renderFetcher = Some(new DownRenderFetcher)))
+    assert(r.failed == 1, s"the service miss must fail the home fetch, got $r")
+    assert(s.read(spark, "state", 0).head().getAs[java.sql.Timestamp]("broken_since") != null)
+    assert(s.read(spark, "metrics", 0).where($"host" === host).head()
+      .getAs[Int]("fetch_failed") == 1)
+    // unbound, the same snapshot home is fetched fine
+    assert(WaveEngine.runWave(spark, newStore(), home, hosts, robots, 0, cc).failed == 0)
+  }
+
   test("seenurls digest write is knob-gated: default path stores null digests") {
     // r4 shipped the md5 digest projection unconditionally — the one
     // feature that escaped its knob gate, paying md5-over-every-body on
@@ -962,4 +973,9 @@ class FakeRenderFetcher(tsMs: Long, homeHtml: String) extends RenderFetcher {
         new java.sql.Timestamp(tsMs)))
     }
   }
+}
+
+/** A render service that is down: every fetch misses. */
+class DownRenderFetcher extends RenderFetcher {
+  def fetch(url: String): Option[RenderFetcher.Rendered] = None
 }
