@@ -5,7 +5,7 @@ import java.util.Locale
 /** Effective robots policy for one user-agent: path-prefix rules plus an
   * optional crawl-delay. The engine caches this per host in its carried
   * state (the north rule's "robots.txt cache") and re-parses on TTL
-  * expiry (CrawlConfig.robotsTtlWaves). */
+  * expiry (WaveEngine.RobotsTtlWaves). */
 final case class RobotsPolicy(
     disallow: Seq[String],
     allow: Seq[String],

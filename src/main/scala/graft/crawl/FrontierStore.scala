@@ -29,18 +29,8 @@ trait FrontierStore extends Serializable {
   /** Drop commits AFTER `wave` (crash simulation / time travel). */
   def rollbackTo(wave: Int): Unit
 
-  /** Write + return the row count. Shared default: cache once so the
-    * count and the write scan the same materialization (bindings only
-    * provide [[writeNoCount]]). */
-  def write(df: DataFrame, table: String, wave: Int): Long = {
-    val cached = df.cache()
-    val n = cached.count()
-    writeNoCount(cached, table, wave)
-    cached.unpersist()
-    n
-  }
-
-  /** Write without a row-count job (one Spark action instead of two). */
+  /** Write one table of one wave, without a row-count job (one Spark
+    * action; the engine derives the counts it records). */
   def writeNoCount(df: DataFrame, table: String, wave: Int): Unit
 
   /** Write a bucket-keyed table PHYSICALLY PARTITIONED by its `bucket`

@@ -104,7 +104,7 @@ final case class HostState(
     robots_allow: Seq[String],
     robots_delay_ms: Option[Long],
     robots_wave: Int,                // wave the robots cache was parsed
-                                     // (TTL: CrawlConfig.robotsTtlWaves)
+                                     // (TTL: WaveEngine.RobotsTtlWaves)
     fetch_ewma_ms: Option[Long] = None) // EWMA (α=1/2) of the host's
                                      // modeled per-fetch duration, fed
                                      // to the adaptive politeness delay

@@ -2,7 +2,8 @@ package graft.crawl
 
 import graft.core.filters.{BloomFilter, CuckooFilter}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{lit, md5}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 
 /** Partitioned Bloom-then-Cuckoo URL-seen filter (north rule).
   *
@@ -30,6 +31,9 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
   *    positives cannot lose rows.
   */
 object SeenFilter {
+
+  /** Target false-positive rate each bucket's Bloom is sized for. */
+  val BloomFpp = 0.01
 
   /** Salted bucket id. B×S total buckets. */
   def bucket(host: String, url: String, hostBuckets: Int, salt: Int): Int = {
@@ -78,11 +82,24 @@ object SeenFilter {
   final case class BucketSketch(bucket: Int, bloom: Option[Array[Byte]],
                                 cuckoo: Option[Array[Byte]])
 
+  /** `seenurls` rows of `articles` committed at `wave`: url-pure bucket,
+    * host, url and — with `digest` — md5(contenthtml), the recrawl
+    * revalidation comparator. md5 and bucket are scan-side projections,
+    * so article bodies never ride the table's bucket repartition. */
+  def seenUrls(articles: DataFrame, wave: Int, hostBuckets: Int, salt: Int,
+      digest: Boolean): Dataset[SeenUrl] = {
+    val spark = articles.sparkSession
+    import spark.implicits._
+    val d = if (digest) md5($"contenthtml") else lit(null).cast("string")
+    articles.select($"host", $"url", d.as("d")).as[(String, String, Option[String])]
+      .map { case (h, u, d) => SeenUrl(urlBucket(u, hostBuckets, salt), h, u, wave, d) }
+  }
+
   /** Per-bucket Bloom filters from (bucket, url) pairs: shuffle the RAW
     * pairs (volume independent of parallelism) and build each filter in
     * one reduce-side pass. */
   def buildBlooms(pairs: Dataset[(Int, String)], expectedPerBucket: Long,
-                  fpp: Double = 0.01): Dataset[(Int, Array[Byte])] = {
+                  fpp: Double = BloomFpp): Dataset[(Int, Array[Byte])] = {
     val spark = pairs.sparkSession
     import spark.implicits._
     pairs.groupByKey(_._1).mapGroups { (b, it) =>

@@ -66,10 +66,6 @@ class SnapshotStore(val root: String) extends FrontierStore {
     while (isCommitted(w)) { Files.delete(manifestPath(w)); w += 1 }
   }
 
-  // write(df, table, wave) is inherited from the trait default
-  // (cache → count → writeNoCount → unpersist), shared with the
-  // Iceberg binding.
-
   /** Write without the row-count job (manifest records -1). One Spark
     * action instead of two — the wave engine calls this for tables whose
     * counts it already derives from the metrics roll-up. */
@@ -104,12 +100,8 @@ class SnapshotStore(val root: String) extends FrontierStore {
     * column present only in NEWER waves can silently vanish from the
     * union (disabling e.g. revalidation on exactly the upgraded stores
     * the fallback logic targets). */
-  def readDeltas(spark: SparkSession, table: String, upTo: Int): Option[DataFrame] = {
-    val paths = (0 to upTo).filter(isCommitted).map(dataPath(table, _))
-      .filter(p => Files.exists(Paths.get(p)))
-    if (paths.isEmpty) None
-    else Some(spark.read.option("mergeSchema", true).parquet(paths: _*))
-  }
+  def readDeltas(spark: SparkSession, table: String, upTo: Int): Option[DataFrame] =
+    readExisting(spark, (0 to upTo).filter(isCommitted).map(dataPath(table, _)))
 
   /** Maximal bucket pruning for the local binding: only the requested
     * `bucket=K` LEAF directories are even listed — unaffected buckets
@@ -117,27 +109,24 @@ class SnapshotStore(val root: String) extends FrontierStore {
     * write of zero rows leaves no bucket dirs) are skipped without the
     * schema-inference failure a root read would hit. */
   override def readBuckets(spark: SparkSession, table: String, upTo: Int,
-      buckets: Seq[Int]): Option[DataFrame] = {
-    val paths = for {
-      w <- 0 to upTo if isCommitted(w)
-      b <- buckets
-      p = s"${dataPath(table, w)}/bucket=$b"
-      if Files.exists(Paths.get(p))
-    } yield p
-    if (paths.isEmpty) None
-    else Some(spark.read.option("mergeSchema", true).parquet(paths: _*))
-  }
+      buckets: Seq[Int]): Option[DataFrame] =
+    readExisting(spark, for (w <- 0 to upTo if isCommitted(w); b <- buckets)
+      yield s"${dataPath(table, w)}/bucket=$b")
 
   /** Exact-wave variant: only `wave`'s own `bucket=K` leaf dirs are
     * listed — no 0..wave walk, and an empty wave (zero bucket dirs
     * under an existing table dir) is None, not a schema-inference
     * failure. */
   override def readWaveBuckets(spark: SparkSession, table: String,
-      wave: Int, buckets: Seq[Int]): Option[DataFrame] = {
-    if (!isCommitted(wave)) return None
-    val paths = buckets.map(b => s"${dataPath(table, wave)}/bucket=$b")
-      .filter(p => Files.exists(Paths.get(p)))
-    if (paths.isEmpty) None
-    else Some(spark.read.option("mergeSchema", true).parquet(paths: _*))
+      wave: Int, buckets: Seq[Int]): Option[DataFrame] =
+    if (!isCommitted(wave)) None
+    else readExisting(spark, buckets.map(b => s"${dataPath(table, wave)}/bucket=$b"))
+
+  /** The existing ones of `paths` as one frame, read with `mergeSchema`
+    * (see [[readDeltas]]); None when none exists. */
+  private def readExisting(spark: SparkSession, paths: Seq[String]): Option[DataFrame] = {
+    val present = paths.filter(p => Files.exists(Paths.get(p)))
+    if (present.isEmpty) None
+    else Some(spark.read.option("mergeSchema", true).parquet(present: _*))
   }
 }

@@ -146,13 +146,8 @@ object StoreMaintenance {
     for (w <- missing) {
       val rows =
         if (store.hasTable("articles", w))
-          store.read(spark, "articles", w)
-            .select($"url", $"host",
-              org.apache.spark.sql.functions.md5($"contenthtml").as("d"))
-            .as[(String, String, String)]
-            .map { case (u, h, d) =>
-              SeenUrl(SeenFilter.urlBucket(u, hb, sl), h, u, w, Some(d)) }
-            .toDF()
+          SeenFilter.seenUrls(store.read(spark, "articles", w), w, hb, sl,
+            digest = true).toDF()
         else spark.emptyDataset[SeenUrl].toDF()
       store.writeBucketed(rows, "seenurls", w)
     }
@@ -162,7 +157,7 @@ object StoreMaintenance {
       .getOrElse(spark.emptyDataset[(Int, String)])
     val rebuilt = SeenFilter.updateSketches(pairs,
       spark.emptyDataset[SeenSketch], cfg.cuckooCapacityPerBucket,
-      cfg.expectedUrlsPerBucket, cfg.bloomFpp)
+      cfg.expectedUrlsPerBucket, SeenFilter.BloomFpp)
     if (Files.exists(Paths.get(store.dataPath("seen", last))))
       rewrite(spark, store, "seen", last)(_ => rebuilt.toDF())
     else store.writeNoCount(rebuilt.toDF(), "seen", last)
@@ -214,7 +209,7 @@ object StoreMaintenance {
     delPairs.filter(_ => affected.nonEmpty).foreach { dels =>
       val carried = store.read(spark, "seen", last).as[SeenSketch]
       val afterCuckoo = SeenFilter.updateSketches(dels, carried,
-        cfg.cuckooCapacityPerBucket, cfg.expectedUrlsPerBucket, cfg.bloomFpp)
+        cfg.cuckooCapacityPerBucket, cfg.expectedUrlsPerBucket, SeenFilter.BloomFpp)
       // surviving urls of the affected buckets: prefer the slim
       // bucket-pruned seenurls read (only the affected leaf dirs are
       // listed); a legacy store falls back to the article-store scan
@@ -231,7 +226,7 @@ object StoreMaintenance {
         .map(u => (SeenFilter.urlBucket(u, hb, sl), u))
         .filter(p => affected.contains(p._1))
       val rebuilt = remaining.groupByKey(_._1)
-        .agg(new SeenFilter.BloomAgg(cfg.expectedUrlsPerBucket, cfg.bloomFpp)
+        .agg(new SeenFilter.BloomAgg(cfg.expectedUrlsPerBucket, SeenFilter.BloomFpp)
           .toColumn.name("bloom2"))
         .toDF("bucket", "bloom2")
       val affectedDf = affected.toSeq.toDF("bucket")

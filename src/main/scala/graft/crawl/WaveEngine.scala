@@ -2,9 +2,10 @@ package graft.crawl
 
 import java.sql.Timestamp
 
-import graft.core.{ArticleExtractor, CatalogDetect, UrlCanon}
+import graft.core.{CatalogDetect, UrlCanon}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, StageCache}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, StageCache}
+import org.apache.spark.sql.expressions.Window
 
 /** Internal per-host work row (home fetch result + carried state).
   * Top-level (not nested/private) because Spark's encoder codegen needs
@@ -38,12 +39,9 @@ final case class CrawlConfig(
     maxPerHostPerWave: Int = 100, // MAX_RECORDS, Constants.cs:13
     hostBuckets: Int = 16,        // seen-filter host-hash buckets (B)
     salt: Int = 4,                // skew salt per host bucket (S)
-    bloomFpp: Double = 0.01,
     expectedUrlsPerBucket: Long = 100000L,
     cuckooCapacityPerBucket: Int = 1 << 14, // ~64 KiB serialized/bucket;
     // scale hostBuckets×salt (and this) together for bigger seen-sets
-    fetchPartitions: Int = 0,     // 0 = leave to AQE / input partitioning
-    robotsTtlWaves: Int = 8,      // robots cache refresh interval (waves)
     userAgent: String = "graftbot", // UA token for robots.txt group match
     // Priority frontier (north rule): global per-wave fetch budget.
     // 0 = unbounded. When set, the wave's task batch is ranked by
@@ -125,31 +123,44 @@ final case class CrawlConfig(
     renderFetcher: Option[RenderFetcher] = None)
 
 /** One wave of the crawl — the Spark re-expression of the reference's
-  * fetch–detect–extract–commit loop (Crawlers/ArticleCrawler.cs:33-262):
+  * fetch–detect–extract–commit loop (Crawlers/ArticleCrawler.cs:33-262),
+  * as seven named stages that `crawlWave` runs in order:
   *
   * {{{
-  * hosts ⋈ carried state  (wave seeding — S7's correlated subquery is
-  *        |                the previous wave's state table, broadcast)
-  *        v
-  * pages ⋈ broadcast(home targets)          (catalog "fetch")
-  *        v
-  * groupByKey(host).flatMapGroups           (politeness scheduler:
-  *        |        catalog detect → newest-first sort → per-wave cap →
-  *        |        lasthandled checkpoint stop → robots filter →
-  *        |        crawl-delay/max-in-flight logical schedule)
-  *        v
-  * priority frontier (rank-ordered budget)  (optional, maxTasksPerWave)
-  *        v
-  * pages ⋈ broadcast(tasks)                 (article fetch-join)
-  *        v
-  * mapPartitions extract                    (byte-identical text,
-  *        |                                  rule-aware, on scan splits)
-  *        v
-  * bloom-probe → cuckoo-probe → bucket-pruned exact anti-join
-  *        v                                       (URL-seen dedup)
-  * append articles + state + seen + seenurls + metrics + lineage;
-  * manifest commit
+  * seed      hosts ⋈ carried state ⋈ robots  (S7's correlated subquery is
+  *    |                                       the previous wave's state
+  *    |                                       table, broadcast)
+  *    v
+  * homes     pages ⋈ broadcast(home targets) (catalog "fetch"; render
+  *    |                                       service for browser hosts)
+  *    v
+  * schedule  groupByKey(host).flatMapGroups  (politeness scheduler:
+  *    |        catalog detect → newest-first sort → per-wave cap →
+  *    |        lasthandled checkpoint stop → robots filter →
+  *    |        crawl-delay/max-in-flight logical schedule), then the
+  *    |        optional priority-frontier budget (maxTasksPerWave)
+  *    v
+  * articles  pages ⋈ broadcast(tasks) → mapPartitions extract
+  *    |        (byte-identical text, rule-aware, on scan splits);
+  *    |        fetch failures, unique-fetch check, lineage
+  *    v
+  * seen      bloom-probe → cuckoo-probe → bucket-pruned exact anti-join
+  *    |        (URL-seen dedup), then recrawl revalidation
+  *    v
+  * rollup    per-host metrics, seen-sketch update, checkpoint finalize
+  *    v
+  * commit    append articles + frontier + state + seen + seenurls +
+  *           metrics + lineage; manifest commit
   * }}}
+  *
+  * Every job a stage launches carries the description
+  * `wave=N stage=<name>` (a wave already committed, read back by
+  * `runWave`, runs under `stage=resume`), and the caller's own
+  * description is restored afterwards. A label names the stage that
+  * LAUNCHED a job: work Spark runs lazily for an earlier stage is
+  * counted under the later one (the politeness groups first run in the
+  * `articles` task count; at wave 0, which collects no maybe-seen
+  * buckets, the seen probe first runs in the `commit` articles write).
   *
   * Everything stays in typed Dataset / DataFrame ops (no RDDs); the only
   * driver-side data are per-host state (≤ seed-list size), per-bucket
@@ -282,6 +293,16 @@ object WaveEngine {
       deduped: Long,
       failed: Long)
 
+  /** Robots cache refresh interval, in waves: a host's parsed policy is
+    * reused while fresh and re-parsed from the raw robots.txt on expiry. */
+  val RobotsTtlWaves = 8
+
+  /** The first row of each `keys` group in `order`: the wave's
+    * deterministic pick among duplicate homes, snapshots and urls. */
+  private def firstPer(df: DataFrame, keys: Seq[Column], order: Column*): DataFrame =
+    df.withColumn("rn", row_number().over(Window.partitionBy(keys: _*).orderBy(order: _*)))
+      .where(col("rn") === 1).drop("rn")
+
   /** Build side of the exact-seen anti-join: the committed url set
     * restricted to the buckets that actually hold maybe-seen rows this
     * wave, and to the recrawl-TTL window. Reads the slim
@@ -310,66 +331,105 @@ object WaveEngine {
 
   // ---- the wave ---------------------------------------------------------
 
-  def runWave(
-      spark: SparkSession,
-      store: FrontierStore,
-      pages: Dataset[Page],
-      hosts: Dataset[HostConfig],
-      robots: Dataset[RobotsRow],
-      wave: Int,
+  def runWave(spark: SparkSession, store: FrontierStore, pages: Dataset[Page],
+      hosts: Dataset[HostConfig], robots: Dataset[RobotsRow], wave: Int,
       cfg: CrawlConfig = CrawlConfig()): WaveResult = {
-    import spark.implicits._
-
-    if (store.isCommitted(wave)) { // snapshot-exact resume: already done
-      val m = store.read(spark, "metrics", wave).as[WaveMetrics]
-      val agg = m.groupBy().agg(
-        sum("scheduled"), sum("fetched_ok"), sum("inserted"),
-        sum("deduped"), sum("fetch_failed")).head()
-      def g(i: Int) = if (agg.isNullAt(i)) 0L else agg.getLong(i)
-      return WaveResult(wave, g(0), g(1), g(2), g(3), g(4))
-    }
+    if (store.isCommitted(wave)) // snapshot-exact resume: already done
+      return labelled(spark, wave, "resume")(
+        totals(wave, store.read(spark, "metrics", wave))._1)
     val stages = new StageCache
     try crawlWave(spark, store, pages, hosts, robots, wave, cfg, stages)
     finally stages.release()
   }
 
-  /** The body of [[runWave]] for a wave not yet committed. Every cached
-    * stage goes through `stages`, whose leaves the caller releases on
-    * every exit path. */
-  private def crawlWave(
-      spark: SparkSession,
-      store: FrontierStore,
-      pages: Dataset[Page],
-      hosts: Dataset[HostConfig],
-      robots: Dataset[RobotsRow],
-      wave: Int,
-      cfg: CrawlConfig,
-      stages: StageCache): WaveResult = {
-    import spark.implicits._
+  /** Runs `body` with `spark.job.description` = `wave=N stage=<stage>`
+    * and then restores the calling thread's own description. Every job
+    * `body` launches from this thread carries the label (broadcast jobs
+    * too: they capture the launching thread's local properties). */
+  private def labelled[T](spark: SparkSession, wave: Int, stage: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"wave=$wave stage=$stage")
+    try body finally sc.setJobDescription(prev)
+  }
 
-    val prevWave = wave - 1
+  /** Wave totals off a wave's per-host `metrics` rows, and the number of
+    * those rows (one per host in the wave's state). */
+  private def totals(wave: Int, metrics: DataFrame): (WaveResult, Long) = {
+    val a = metrics.agg(sum("scheduled"), sum("fetched_ok"), sum("inserted"),
+      sum("deduped"), sum("fetch_failed"), count(lit(1))).head()
+    def g(i: Int) = if (a.isNullAt(i)) 0L else a.getLong(i)
+    (WaveResult(wave, g(0), g(1), g(2), g(3), g(4)), g(5))
+  }
+
+  /** The article stage's outputs: the extraction (one row per fetched
+    * url), the tasks that found no page, the per-partition lineage, and
+    * whether the task batch is small enough to broadcast. */
+  private final case class Fetched(extracted: Dataset[ArticleRow],
+      fails: Dataset[(String, String)], lineage: Dataset[PartitionLineage],
+      hint: Boolean)
+
+  /** The URL-seen stage's outputs: the carried sketches, the wave's new
+    * urls, their articles, and the articles to store (the new ones
+    * minus those revalidated unchanged). */
+  private final case class Seen(carried: Dataset[SeenSketch],
+      winners: Dataset[UrlRef], newArticles: Dataset[ArticleRow],
+      stored: Dataset[ArticleRow])
+
+  /** The body of [[runWave]] for a wave not yet committed: the seven
+    * stages in order, each under its job label. Every cached stage goes
+    * through `stages`, whose leaves the caller releases on every exit
+    * path. */
+  private def crawlWave(spark: SparkSession, store: FrontierStore,
+      pages: Dataset[Page], hosts: Dataset[HostConfig], robots: Dataset[RobotsRow],
+      wave: Int, cfg: CrawlConfig, stages: StageCache): WaveResult = {
+    def stage[T](name: String)(body: => T): T = labelled(spark, wave, name)(body)
+    val (prevState, seeded) = stage("seed")(seed(spark, store, hosts, robots, wave))
+    val work = stage("homes")(homes(spark, pages, seeded, cfg, stages))
+    val (outcomes, tasks, budgetDropped) =
+      stage("schedule")(schedule(spark, work, wave, cfg, stages))
+    val fetched = stage("articles")(
+      articles(spark, pages, hosts, tasks, wave, cfg, stages))
+    val seenOut = stage("seen")(seen(spark, store, fetched, wave, cfg, stages))
+    val (metrics, newSeen, newState) = stage("rollup")(rollup(spark, store,
+      prevState, outcomes, tasks, budgetDropped, fetched, seenOut, wave, cfg, stages))
+    stage("commit")(commit(spark, store, tasks, fetched.lineage, seenOut,
+      metrics, newSeen, newState, wave, cfg))
+  }
+
+  /** Seeding: enabled hosts ⋈ carried state ⋈ robots (all host-sized,
+    * broadcast) — the Spark form of QueueCrawlAsync's insert-select with
+    * correlated last-checkpoint subquery (MySQLDataLayer.cs:416-438).
+    * Returns the previous wave's state and the seeded host rows. */
+  private def seed(spark: SparkSession, store: FrontierStore,
+      hosts: Dataset[HostConfig], robots: Dataset[RobotsRow],
+      wave: Int): (Dataset[HostState], DataFrame) = {
+    import spark.implicits._
     val prevState: Dataset[HostState] =
-      if (wave > 0 && store.isCommitted(prevWave)) {
+      if (wave > 0 && store.isCommitted(wave - 1)) {
         // pre-adaptive-politeness stores lack fetch_ewma_ms — backfill
         // null (= "no observation yet") so old stores resume unchanged
-        val raw = store.read(spark, "state", prevWave)
+        val raw = store.read(spark, "state", wave - 1)
         (if (raw.columns.contains("fetch_ewma_ms")) raw
          else raw.withColumn("fetch_ewma_ms", lit(null).cast("long")))
           .as[HostState]
       } else spark.emptyDataset[HostState]
-
-    // -- seeding: enabled hosts ⋈ carried state ⋈ robots (all host-sized,
-    //    broadcast) — the Spark form of QueueCrawlAsync's insert-select
-    //    with correlated last-checkpoint subquery (MySQLDataLayer.cs:416-438)
     val seeded = hosts.where($"enabled")
       .join(broadcast(prevState.toDF()), Seq("host"), "left")
       .join(broadcast(robots.toDF()
         .withColumnRenamed("robots_txt", "r_txt")), Seq("host"), "left")
+    (prevState, seeded)
+  }
 
-    // -- catalog fetch: big pages table ⋈ broadcast(home targets), inner
-    //    (broadcast is only legal on the small side of an inner join;
-    //    missing homes are recovered with a cheap anti-join against the
-    //    small fetched set — the pages table is scanned, never shuffled)
+  /** Catalog fetch: big pages table ⋈ broadcast(home targets), inner
+    * (broadcast is only legal on the small side of an inner join;
+    * missing homes are recovered with a cheap anti-join against the
+    * small fetched set — the pages table is scanned, never shuffled),
+    * plus the render-service route for browser-ruled hosts. */
+  private def homes(spark: SparkSession, pages: Dataset[Page],
+      seeded: DataFrame, cfg: CrawlConfig,
+      stages: StageCache): Dataset[HostWork] = {
+    import spark.implicits._
     // rule-driven page-URL revise (S4/U13) happens BEFORE the fetch —
     // the revised URL (e.g. an AJAX feed endpoint) is what gets looked up
     val homeCanonUdf = udf { (home: String, exp: String, rep: String) =>
@@ -390,58 +450,50 @@ object WaveEngine {
     // COMPOUND across waves). This side is host-sized after the join,
     // so the always-on window is free: newest snapshot wins, md5(html)
     // tiebreak keeps the pick deterministic.
-    // S5 seam (same routing as the article stage below): with a
+    // S5 seam (same routing as the article stage): with a
     // RenderFetcher bound, browser-ruled hosts' HOME fetches also go
     // through the service — the reference proxies EVERY page of a
     // BrowserProxy site, and a JS-rendered catalog is usually the whole
     // point. Unbound (the default), every host takes the snapshot path.
     val (snapTargets, browserTargets) = cfg.renderFetcher match {
       case None => (homeTargets, None)
-      case Some(_) =>
+      case Some(rf) =>
         val (snap, browser) = splitByBrowserFlag(homeTargets)
-        (snap, Some(browser))
+        (snap, Some((rf, browser)))
     }
-    val homeUniqW = org.apache.spark.sql.expressions.Window
-      .partitionBy($"host").orderBy($"fetched_ts".desc, md5($"html"))
     // cached: host-sized after the join; saves a second full pages scan
-    val homesOk = stages.leaf(pages.toDF()
+    val homesOk = stages.leaf(firstPer(pages.toDF()
       .select($"url".as("home_canon"), $"html", $"warc_ts".as("fetched_ts"))
-      .join(broadcast(snapTargets), Seq("home_canon"), "inner")
-      .withColumn("rn", row_number().over(homeUniqW))
-      .where($"rn" === 1).drop("rn"))
+      .join(broadcast(snapTargets), Seq("home_canon"), "inner"),
+      Seq($"host"), $"fetched_ts".desc, md5($"html")))
     val homesMissing = snapTargets
       .join(homesOk.select($"host".as("ok_host")),
         $"host" === $"ok_host", "left_anti")
       .withColumn("html", lit(null).cast("binary"))
       .withColumn("fetched_ts", lit(null).cast("timestamp"))
-    val homesRendered = (cfg.renderFetcher, browserTargets) match {
-      case (Some(rf), Some(bt)) =>
-        // service fetch per host (host-sized); a miss yields null html
-        // and flows into the same broken-host path as a snapshot miss.
-        // NO broadcast hint on the join-back: `fetched` carries full
-        // rendered page bodies, and broadcast() would funnel every
-        // flagged host's catalog HTML through the driver (review
-        // finding) — an unhinted host-keyed equi-join ships the blobs
-        // executor-to-executor once, like every other body-carrying
-        // join in the wave.
-        val fetched = bt.select($"host".as("rhost"), $"home_canon")
-          .as[(String, String)]
-          .mapPartitions(_.map { case (h, u) =>
-            rf.fetch(u) match {
-              case Some(r) => (h, r.html, r.fetchedAt)
-              case None => (h, null: Array[Byte], null: Timestamp)
-            }
-          }).toDF("rhost", "html", "fetched_ts")
-        Some(bt.join(fetched, $"host" === $"rhost", "left")
-          .drop("rhost"))
-      case _ => None
+    val homesRendered = browserTargets.map { case (rf, bt) =>
+      // service fetch per host (host-sized); a miss yields null html
+      // and flows into the same broken-host path as a snapshot miss.
+      // NO broadcast hint on the join-back: `fetched` carries full
+      // rendered page bodies, and broadcast() would funnel every
+      // flagged host's catalog HTML through the driver (review
+      // finding) — an unhinted host-keyed equi-join ships the blobs
+      // executor-to-executor once, like every other body-carrying
+      // join in the wave.
+      val fetched = bt.select($"host".as("rhost"), $"home_canon")
+        .as[(String, String)]
+        .mapPartitions(_.map { case (h, u) =>
+          rf.fetch(u) match {
+            case Some(r) => (h, r.html, r.fetchedAt)
+            case None => (h, null: Array[Byte], null: Timestamp)
+          }
+        }).toDF("rhost", "html", "fetched_ts")
+      bt.join(fetched, $"host" === $"rhost", "left").drop("rhost")
     }
-    val fetchedHomes = homesRendered.foldLeft(
-      homesOk.drop("home_canon")
-        .unionByName(homesMissing.drop("home_canon")))(
-      (acc, r) => acc.unionByName(r.drop("home_canon")))
+    val fetchedHomes = (Seq(homesOk, homesMissing) ++ homesRendered)
+      .map(_.drop("home_canon")).reduce(_ unionByName _)
 
-    val work = fetchedHomes.select(
+    fetchedHomes.select(
       $"host", $"host_id", $"home", $"rank",
       col("crawl_delay_ms"), $"max_in_flight", $"rule",
       $"lasthandled", $"broken_since",
@@ -455,11 +507,19 @@ object WaveEngine {
       $"r_txt".as("robots_txt"),
       $"html", $"fetched_ts"
     ).as[HostWork]
+  }
 
-    // -- politeness + catalog detection: whole-host groups (NEVER salted —
-    //    per-host sequential semantics are the politeness contract, T5)
+  /** Politeness + catalog detection over whole-host groups (NEVER salted
+    * — per-host sequential semantics are the politeness contract, T5),
+    * then the optional priority-frontier budget. Returns the per-host
+    * outcomes, the wave's task batch, and the hosts whose ENTIRE batch
+    * fell under the budget cut (their checkpoint must revert: deferred,
+    * not skipped). */
+  private def schedule(spark: SparkSession, work: Dataset[HostWork],
+      wave: Int, cfg: CrawlConfig, stages: StageCache)
+      : (Dataset[HostOutcome], Dataset[FetchTask], DataFrame) = {
+    import spark.implicits._
     val maxPer = cfg.maxPerHostPerWave
-    val robotsTtl = cfg.robotsTtlWaves
     val ua = cfg.userAgent
     val adaptFactor = cfg.adaptiveDelayFactor
     val adaptMaxMs = cfg.adaptiveMaxDelayMs
@@ -485,7 +545,7 @@ object WaveEngine {
               // robots cache with TTL: reuse the parsed policy while
               // fresh; re-parse the raw robots.txt on expiry (or first
               // sight), so upstream robots changes ARE picked up
-              val cacheValid = w.robots_wave >= 0 && wave - w.robots_wave < robotsTtl
+              val cacheValid = w.robots_wave >= 0 && wave - w.robots_wave < RobotsTtlWaves
               val cached = graft.core.RobotsPolicy(
                 w.robots_disallow, w.robots_allow, w.robots_delay_ms)
               val (robotsPol, robotsWave) =
@@ -528,45 +588,48 @@ object WaveEngine {
     // maxTasksPerWave — orderBy+limit = distributed TakeOrdered (each
     // partition keeps its local top-K, the driver merges K rows; no
     // global sort shuffle, no single-partition window)
+    val budget = cfg.maxTasksPerWave
     val tasksAll = outcomes.flatMap(_.tasks)
+    // proportional-fairness budget (CrawlConfig.apportionTasksPerWave):
+    // Hamilton-split the budget across the batch's hosts ∝ rank, then
+    // keep each host's first `alloc` tasks in schedule order. Weights
+    // are host-sized (aggregated off the cached outcomes);
+    // apportionOrNone aggregates the total ONCE for both the
+    // zero-weight guard and the quota math — an all-zero-rank batch
+    // yields None and falls back to the rank-ordered cut.
+    val quotas =
+      if (budget > 0 && cfg.apportionTasksPerWave)
+        graft.ops.LinkGraph.apportionOrNone(tasksAll.toDF().groupBy($"host")
+          .agg(max($"rank").as("w")), $"host", $"w", budget.toLong)
+      else None
     val tasks: Dataset[FetchTask] = stages.leaf(
-      if (cfg.maxTasksPerWave > 0 && cfg.apportionTasksPerWave) {
-        // proportional-fairness budget (CrawlConfig.apportionTasksPerWave):
-        // Hamilton-split the budget across the batch's hosts ∝ rank,
-        // then keep each host's first `alloc` tasks in schedule order.
-        // Weights are host-sized (aggregated off the cached outcomes);
-        // apportionOrNone aggregates the total ONCE for both the
-        // zero-weight guard and the quota math — an all-zero-rank
-        // batch yields None and falls back to the rank-ordered cut.
-        val weights = tasksAll.toDF().groupBy($"host")
-          .agg(max($"rank").as("w"))
-        graft.ops.LinkGraph.apportionOrNone(
-            weights, $"host", $"w", cfg.maxTasksPerWave.toLong) match {
-          case Some(q) =>
-            val quotas = q.select($"item".as("host"), $"alloc")
-            val perHost = org.apache.spark.sql.expressions.Window
-              .partitionBy($"host").orderBy($"seq")
-            tasksAll.toDF()
-              .withColumn("rn", row_number().over(perHost))
-              .join(broadcast(quotas), Seq("host"), "left")
-              .where($"rn" <= coalesce($"alloc", lit(0L)))
-              .drop("rn", "alloc").as[FetchTask]
-          case None => tasksAll.orderBy($"rank".desc, $"host", $"seq")
-            .limit(cfg.maxTasksPerWave).as[FetchTask]
-        }
-      } else if (cfg.maxTasksPerWave > 0)
-        tasksAll.orderBy($"rank".desc, $"host", $"seq")
-          .limit(cfg.maxTasksPerWave).as[FetchTask]
-      else tasksAll)
-    // hosts whose ENTIRE batch fell under the budget cut: their
-    // checkpoint must revert (deferred, not skipped) — host-sized set
-    val budgetDroppedHosts: DataFrame =
-      if (cfg.maxTasksPerWave > 0)
+      if (budget <= 0) tasksAll
+      else quotas match {
+        case Some(q) =>
+          tasksAll.toDF()
+            .withColumn("rn", row_number().over(Window.partitionBy($"host").orderBy($"seq")))
+            .join(broadcast(q.select($"item".as("host"), $"alloc")),
+              Seq("host"), "left")
+            .where($"rn" <= coalesce($"alloc", lit(0L)))
+            .drop("rn", "alloc").as[FetchTask]
+        case None => tasksAll.orderBy($"rank".desc, $"host", $"seq")
+          .limit(budget).as[FetchTask]
+      })
+    val budgetDropped: DataFrame =
+      if (budget > 0)
         tasksAll.toDF().select($"host").distinct()
           .join(tasks.toDF().select($"host").distinct(), Seq("host"), "left_anti")
           .withColumn("all_failed", lit(true))
       else Seq.empty[(String, Boolean)].toDF("host", "all_failed")
+    (outcomes, tasks, budgetDropped)
+  }
 
+  /** Article fetch-join, extraction, fetch failures, the unique-fetch
+    * check and the per-partition lineage. */
+  private def articles(spark: SparkSession, pages: Dataset[Page],
+      hosts: Dataset[HostConfig], tasks: Dataset[FetchTask], wave: Int,
+      cfg: CrawlConfig, stages: StageCache): Fetched = {
+    import spark.implicits._
     // -- article fetch-join: pages ⋈ tasks on canonical url. The
     //    broadcast hint is GATED on the measured batch size: a typical
     //    wave's batch (≤ maxTasksPerWave, or counted from the cached
@@ -576,20 +639,18 @@ object WaveEngine {
     //    skew-free (urls are unique) — broadcast() is a hard hint, so
     //    hinting an unbounded batch would be a driver OOM, not a
     //    join-swap. The count on the cached tasks Dataset front-loads
-    //    work the next action needs anyway (one extra job of
-    //    scheduling latency). The politeness grouping above is the
-    //    only stage that must stay whole-host.
+    //    work the next action needs anyway, and the unique-fetch check
+    //    below reuses it. The politeness grouping is the only stage
+    //    that must stay whole-host.
     // The configured cap is only a valid stand-in for the batch size
     // when it PROVES the batch fits under the broadcast limit; a cap
     // above the limit says nothing about the actual rows (a 2M cap on
     // a few-thousand-row wave must not force the shuffle path), so
     // count the cached batch in that case.
-    val taskBatchRows: Long =
-      if (cfg.maxTasksPerWave > 0 &&
-          cfg.maxTasksPerWave <= cfg.broadcastTaskLimit)
-        cfg.maxTasksPerWave.toLong
-      else tasks.count()
-    val hintTaskBroadcast = taskBatchRows <= cfg.broadcastTaskLimit
+    lazy val nTasks = tasks.count()
+    val hint = (cfg.maxTasksPerWave > 0 &&
+      cfg.maxTasksPerWave <= cfg.broadcastTaskLimit) ||
+      nTasks <= cfg.broadcastTaskLimit
     val tasksDF = tasks.toDF().withColumnRenamed("title", "cat_title")
     // host→rule map rides along (host-sized broadcast) so the article
     // stage can apply the rule's art_*_exp overrides (ParseArticle,
@@ -600,7 +661,7 @@ object WaveEngine {
     // partition); everything else keeps the snapshot fetch-join plan
     // verbatim. Politeness/scheduling already shaped both alike.
     val fetched = cfg.renderFetcher match {
-      case None => fetchJoin(pages.toDF(), tasksDF, hostRules, hintTaskBroadcast)
+      case None => fetchJoin(pages.toDF(), tasksDF, hostRules, hint)
       case Some(rf) =>
         val (snapTasks0, browserTasks) = splitByBrowserFlag(
           tasksDF.join(broadcast(hostRules), Seq("host"), "left"))
@@ -620,31 +681,24 @@ object WaveEngine {
             "html", "warc_ts", "rule")
         // snapshot side carries extra page columns (text, lang) the
         // extract stage never reads — null-filled on the rendered side
-        fetchJoin(pages.toDF(), snapTasks, hostRules, hintTaskBroadcast)
+        fetchJoin(pages.toDF(), snapTasks, hostRules, hint)
           .unionByName(rendered, allowMissingColumns = true)
     }
 
-    // -- extraction runs ON THE JOIN OUTPUT'S OWN PARTITIONS — no
-    //    repartition. Extraction is row-local work over input splits
-    //    that are already BYTES-balanced (parquet split planning /
-    //    shuffle-hash-join url partitioning at scale), so a hot domain
-    //    cannot skew this stage no matter how its rows are laid out;
-    //    an extra exchange here would shuffle every html blob per wave
-    //    for zero balance gain (measured: removing it cut a full
-    //    content-sized shuffle from the wave). The north rule's salted
-    //    host-hash partitioning lives where host-keyed state actually
-    //    needs skew-spreading: the seen-filter buckets
-    //    (SeenFilter.bucket, B×S salted) — politeness stays whole-host
-    //    by contract. `cfg.fetchPartitions` can force an explicit
-    //    repartition when an operator knows better (e.g. few huge input
-    //    files).
-    val queued =
-      if (cfg.fetchPartitions > 0) fetched.repartition(cfg.fetchPartitions)
-      else fetched
-
     // -- extraction: per-partition batched typed map (byte-identical
-    //    text), rule-aware (article-stage overrides)
-    val extractedRaw = stages.leaf(queued.select(
+    //    text), rule-aware (article-stage overrides). It runs ON THE
+    //    JOIN OUTPUT'S OWN PARTITIONS — no repartition. Extraction is
+    //    row-local work over input splits that are already
+    //    BYTES-balanced (parquet split planning / shuffle-hash-join url
+    //    partitioning at scale), so a hot domain cannot skew this stage
+    //    no matter how its rows are laid out; an extra exchange here
+    //    would shuffle every html blob per wave for zero balance gain
+    //    (measured: removing it cut a full content-sized shuffle from
+    //    the wave). The north rule's salted host-hash partitioning
+    //    lives where host-keyed state actually needs skew-spreading:
+    //    the seen-filter buckets (SeenFilter.bucket, B×S salted) —
+    //    politeness stays whole-host by contract.
+    val extractedRaw = stages.leaf(fetched.select(
       $"url", $"host", $"wave", $"seq", $"cat_title", $"published",
       $"html", $"warc_ts", $"rule").as[(String, String, Int, Int, String,
         Option[Timestamp], Array[Byte], Timestamp, Option[RuleSpec])]
@@ -683,15 +737,10 @@ object WaveEngine {
     //    the body-window dedup: newest snapshot wins (warc_ts desc),
     //    content-md5 tiebreak, so the kept row is fully deterministic.
     val extracted =
-      if (extractedRaw.count() == tasks.count() - fetchFails.count())
+      if (extractedRaw.count() == nTasks - fetchFails.count())
         extractedRaw
-      else {
-        val uniqW = org.apache.spark.sql.expressions.Window
-          .partitionBy($"url", $"host", $"seq")
-          .orderBy($"warc_ts".desc, md5($"content"))
-        stages.leaf(extractedRaw.toDF().withColumn("rn", row_number().over(uniqW))
-          .where($"rn" === 1).drop("rn").as[ArticleRow])
-      }
+      else stages.leaf(firstPer(extractedRaw.toDF(), Seq($"url", $"host", $"seq"),
+        $"warc_ts".desc, md5($"content")).as[ArticleRow])
 
     // -- per-partition lineage rows (north rule) — over the RAW
     //    extraction output: lineage records the work the extract stage
@@ -701,15 +750,20 @@ object WaveEngine {
       .agg(count(lit(1)).as("rows"), countDistinct($"host").as("hosts"))
       .select(lit(wave).as("wave"), lit("extract").as("stage"),
         $"partition_id", $"rows", $"hosts").as[PartitionLineage]
+    Fetched(extracted, fetchFails, lineage, hint)
+  }
 
-    // -- URL-seen: bloom (rebuilt from committed urls) → cuckoo
-    //    (carried) → exact anti-join. Everything keyed by salted
-    //    host-hash bucket and cogrouped — sketches are never collected
-    //    or broadcast, so probe-prep work is independent of parallelism.
-    //    Probe semantics: the Bloom covers the FULL committed URL set,
-    //    so "both say no" ⇒ definitely unseen (no false negatives); any
-    //    "yes" routes to the exact anti-join (false positives can never
-    //    lose rows).
+  /** URL-seen: bloom (rebuilt from committed urls) → cuckoo (carried) →
+    * exact anti-join, then the flag-gated recrawl revalidation.
+    * Everything keyed by salted host-hash bucket and cogrouped —
+    * sketches are never collected or broadcast, so probe-prep work is
+    * independent of parallelism. Probe semantics: the Bloom covers the
+    * FULL committed URL set, so "both say no" ⇒ definitely unseen (no
+    * false negatives); any "yes" routes to the exact anti-join (false
+    * positives can never lose rows). */
+  private def seen(spark: SparkSession, store: FrontierStore, in: Fetched,
+      wave: Int, cfg: CrawlConfig, stages: StageCache): Seen = {
+    import spark.implicits._
     // a store written before the url-pure bucket key carries sketches
     // keyed by (schedulingHost, url) — probing them with urlBucket
     // would miss cross-host-syndicated urls and re-insert them (the
@@ -723,8 +777,8 @@ object WaveEngine {
       case _ => ()
     }
     val carriedSeen: Dataset[SeenSketch] =
-      if (wave > 0 && store.isCommitted(prevWave))
-        store.read(spark, "seen", prevWave).as[SeenSketch]
+      if (wave > 0 && store.isCommitted(wave - 1))
+        store.read(spark, "seen", wave - 1).as[SeenSketch]
       else spark.emptyDataset[SeenSketch]
 
     val ttl = cfg.recrawlAfterWaves
@@ -745,14 +799,13 @@ object WaveEngine {
     // the url-seen contract is global per url, so the same canonical
     // url scheduled by two different hosts in different waves must
     // probe the SAME bucket
-    val keyed = extracted.map(a =>
+    val keyed = in.extracted.map(a =>
       (SeenFilter.urlBucket(a.url, hb, sl), UrlRef(a.url, a.host, a.seq)))
     val classified = stages.leaf(SeenFilter.probe(keyed, sketches))
 
     val definitelyNew = classified.filter(!_._2).map(_._1)
     val maybeSeen = classified.filter(_._2).map(_._1)
-    // exact-seen anti-join, BUCKET-PRUNED: the affected bucket ids (a
-    // tiny driver set, ≤ B×S ints off the cached slim probe output)
+    // exact-seen anti-join, BUCKET-PRUNED: the affected bucket ids
     // restrict the build side to just the slim `seenurls` partitions
     // that could hold a maybe-seen url — the scan no longer grows with
     // the committed store (round 3 re-read the whole article store's
@@ -767,29 +820,22 @@ object WaveEngine {
       else classified.filter(_._2)
         .map(t => SeenFilter.urlBucket(t._1.url, hb, sl))
         .distinct().collect().toSeq.sorted
-    val confirmedNew =
-      if (wave == 0) maybeSeen
-      else {
-        seenBuildSide(spark, store, prevWave, wave, ttl, maybeBuckets) match {
-          case None => maybeSeen
-          case Some(side) => maybeSeen.toDF()
-            .join(side, Seq("url"), "left_anti").as[UrlRef]
-        }
-      }
+    // (wave 0 has no affected buckets, hence no build side)
+    val confirmedNew = seenBuildSide(spark, store, wave - 1, wave, ttl, maybeBuckets) match {
+      case None => maybeSeen
+      case Some(side) => maybeSeen.toDF().join(side, Seq("url"), "left_anti").as[UrlRef]
+    }
     // intra-wave duplicates (two hosts syndicating the same canonical
     // url in one wave): the reference's UNIQUE key keeps whichever
     // insert lands first; our deterministic projection keeps the
     // lexicographically smallest (host, seq). Decided over slim refs;
     // winners are wave-batch-sized, so they re-attach to the cached
     // bodies with the same gated broadcast as the fetch-join.
-    val dedupW = org.apache.spark.sql.expressions.Window
-      .partitionBy($"url").orderBy($"host", $"seq")
-    val winners = stages.leaf(definitelyNew.unionByName(confirmedNew).toDF()
-      .withColumn("rn", row_number().over(dedupW))
-      .where($"rn" === 1).drop("rn").as[UrlRef])
+    val winners = stages.leaf(firstPer(definitelyNew.unionByName(confirmedNew).toDF(),
+      Seq($"url"), $"host", $"seq").as[UrlRef])
     val winnersDF = winners.toDF()
-    val newArticles = extracted.toDF()
-      .join(if (hintTaskBroadcast) broadcast(winnersDF) else winnersDF,
+    val newArticles = in.extracted.toDF()
+      .join(if (in.hint) broadcast(winnersDF) else winnersDF,
         Seq("url", "host", "seq"), "left_semi")
       .as[ArticleRow]
 
@@ -807,9 +853,9 @@ object WaveEngine {
             val oldDigest = old.where($"digest".isNotNull)
               .groupBy($"url")
               .agg(max_by($"digest", $"wave").as("old_digest"))
-            // cached: the anti-join under newStored runs in TWO actions
-            // (articles write + metrics roll-up) — without the cache
-            // each re-reads the expired buckets and re-runs the
+            // cached: the anti-join under the stored rows runs in TWO
+            // actions (articles write + metrics roll-up) — without the
+            // cache each re-reads the expired buckets and re-runs the
             // max_by shuffle
             Some(stages.leaf(newArticles.toDF()
               .select($"url", md5($"contenthtml").as("new_digest"))
@@ -822,13 +868,23 @@ object WaveEngine {
     // stored rows = winners minus revalidated; the seen-state
     // (seenurls + sketches) still covers ALL winners so the TTL
     // restarts for revalidated urls too
-    val newStored: Dataset[ArticleRow] = revalidatedUrls match {
+    val stored: Dataset[ArticleRow] = revalidatedUrls match {
       case Some(rv) => newArticles.toDF()
-        .join(if (hintTaskBroadcast) broadcast(rv) else rv,
+        .join(if (in.hint) broadcast(rv) else rv,
           Seq("url"), "left_anti").as[ArticleRow]
       case None => newArticles
     }
+    Seen(carriedSeen, winners, newArticles, stored)
+  }
 
+  /** The wave's roll-up: per-host metrics (cached, one partition), the
+    * updated seen-sketches, and the finalized host state. */
+  private def rollup(spark: SparkSession, store: FrontierStore,
+      prevState: Dataset[HostState], outcomes: Dataset[HostOutcome],
+      tasks: Dataset[FetchTask], budgetDropped: DataFrame, in: Fetched,
+      sn: Seen, wave: Int, cfg: CrawlConfig, stages: StageCache)
+      : (DataFrame, Dataset[SeenSketch], Dataset[HostState]) = {
+    import spark.implicits._
     // -- metrics per host (A4 roll-up): ONE tagged union + ONE groupBy
     //    instead of four separate aggregate-join plans — same result,
     //    a quarter of the driver planning/codegen and one shuffle.
@@ -836,9 +892,9 @@ object WaveEngine {
     //    `deduped` (= fetched_ok − inserted): fetched, unchanged, not
     //    re-stored.
     val tagged = tasks.toDF().select($"host", lit("s").as("k"))
-      .unionByName(extracted.toDF().select($"host", lit("f").as("k")))
-      .unionByName(fetchFails.toDF("host", "url").select($"host", lit("x").as("k")))
-      .unionByName(newStored.toDF().select($"host", lit("i").as("k")))
+      .unionByName(in.extracted.toDF().select($"host", lit("f").as("k")))
+      .unionByName(in.fails.toDF("host", "url").select($"host", lit("x").as("k")))
+      .unionByName(sn.stored.toDF().select($"host", lit("i").as("k")))
     // cached: consumed twice (metrics roll-up AND checkpoint finalize)
     val counts = stages.leaf(tagged.groupBy($"host").agg(
       count(when($"k" === "s", 1)).as("scheduled"),
@@ -869,15 +925,16 @@ object WaveEngine {
     //    fingerprint — multiset semantics, so a url re-inserted since
     //    keeps its newer entry). The Bloom keeps its stale positives;
     //    they only cost exact anti-join probes.
-    val inserts = winners.map(a =>
+    val hb = cfg.hostBuckets; val sl = cfg.salt
+    val inserts = sn.winners.map(a =>
       (SeenFilter.urlBucket(a.url, hb, sl), a.url, true))
-    val evictWave = wave - ttl
+    val evictWave = wave - cfg.recrawlAfterWaves
     // eviction reads the expiring wave's SEENURLS (slim, and — unlike
     // the articles table — it also covers urls that wave merely
     // REVALIDATED, whose sketch entries must expire too); legacy waves
     // without the table fall back to the articles url column
     val changes =
-      if (ttl > 0 && evictWave >= 0 && store.isCommitted(evictWave)) {
+      if (cfg.recrawlAfterWaves > 0 && evictWave >= 0 && store.isCommitted(evictWave)) {
         val evictUrls = store
           .readWaveBuckets(spark, "seenurls", evictWave, 0 until hb * sl)
           .map(_.select($"url"))
@@ -892,8 +949,8 @@ object WaveEngine {
         }
       } else inserts
     val newSeen = SeenFilter.updateSketches(
-      changes, carriedSeen, cfg.cuckooCapacityPerBucket,
-      cfg.expectedUrlsPerBucket, cfg.bloomFpp)
+      changes, sn.carried, cfg.cuckooCapacityPerBucket,
+      cfg.expectedUrlsPerBucket, SeenFilter.BloomFpp)
 
     // -- checkpoint finalize: a host whose every scheduled fetch FAILED
     //    keeps its previous lasthandled (reference: "Failed as nothing
@@ -905,7 +962,7 @@ object WaveEngine {
     val allFailed = counts
       .where($"fetched_ok" === 0 && $"task_failed" > 0)
       .select($"host", lit(true).as("all_failed"))
-      .unionByName(budgetDroppedHosts)
+      .unionByName(budgetDropped)
       .distinct()
     // per-host MODELED fetch duration this wave (adaptive politeness
     // input): 50 ms + payload/64 bytes-per-ms over the cached extracted
@@ -917,7 +974,7 @@ object WaveEngine {
     // bounds N→4N scaling at micro-wave sizes).
     val hostFetchMs =
       if (cfg.adaptiveDelayFactor > 0.0)
-        extracted.toDF()
+        in.extracted.toDF()
           .groupBy($"host")
           .agg(avg(lit(50.0) + octet_length($"contenthtml") / lit(64.0))
             .as("cur_fetch_ms"))
@@ -954,33 +1011,34 @@ object WaveEngine {
           $"host" === $"wh", "left_anti")
         .drop("wh"))
       .as[HostState]
+    (stages.leaf(metrics.toDF().coalesce(1)), newSeen, newState)
+  }
 
-    // -- commit (manifest rename = the snapshot swap). Host-sized tables
-    //    coalesce to one file (they are ≤ seed-list rows); articles keep
-    //    their partitioning.
-    //
-    //    The ARTICLES write runs first: it materializes every shared
-    //    cache (extract, probe, dedup) exactly once. The five remaining
-    //    tables are small and independent, so their writes run as
-    //    CONCURRENT driver jobs — at micro-wave sizes each write's cost
-    //    is per-job scheduling latency, not work, and serializing them
-    //    was the dominant share of the wave's serial floor (measured
-    //    with a per-job SparkListener).
-    val mCached = stages.leaf(metrics.toDF().coalesce(1))
-    store.writeNoCount(newStored.toDF(), "articles", wave)
+  /** Commit (manifest rename = the snapshot swap). Host-sized tables
+    * coalesce to one file (they are ≤ seed-list rows); articles keep
+    * their partitioning.
+    *
+    * The ARTICLES write runs first: it materializes every shared cache
+    * (extract, probe, dedup) exactly once. The five remaining tables
+    * are small and independent, so their writes run as CONCURRENT
+    * driver jobs — at micro-wave sizes each write's cost is per-job
+    * scheduling latency, not work, and serializing them was the
+    * dominant share of the wave's serial floor (measured with a
+    * per-job SparkListener). */
+  private def commit(spark: SparkSession, store: FrontierStore,
+      tasks: Dataset[FetchTask], lineage: Dataset[PartitionLineage],
+      sn: Seen, metrics: DataFrame, newSeen: Dataset[SeenSketch],
+      newState: Dataset[HostState], wave: Int, cfg: CrawlConfig): WaveResult = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      WaveEngine.commitEc
+    store.writeNoCount(sn.stored.toDF(), "articles", wave)
     // wave totals from the metrics roll-up; runs BEFORE the concurrent
     // writes so it also MATERIALIZES the shared mid-sized caches
-    // (fetchFails → counts → mCached) exactly once — launching the
+    // (fetchFails → counts → metrics) exactly once — launching the
     // writes first let several concurrent jobs race through the same
     // not-yet-cached partitions and compute them in duplicate (the
     // "Block already exists" signature).
-    val agg = mCached.groupBy().agg(
-      sum("scheduled"), sum("fetched_ok"), sum("deduped"),
-      sum("fetch_failed"), sum("inserted"), count(lit(1))).head()
+    val (result, hostRows) = totals(wave, metrics)
     // slim committed-url side table, appended per wave and PARTITIONED
     // by the same url-bucket the sketches use — the bucket-pruned build
     // side of the next waves' exact-seen anti-join. Built from ALL
@@ -992,57 +1050,42 @@ object WaveEngine {
     // bench's +43% 4-core task-CPU reading), and a store written
     // without digests later upgraded to revalidation just treats the
     // digest-less rows as changed (the documented legacy fallback).
-    // Either way md5/bucket are scan-side projections off the extract
-    // cache — bodies never ride the bucket repartition.
-    val seenUrlRows =
-      if (cfg.revalidateOnRecrawl)
-        newArticles.toDF()
-          .select($"host", $"url", md5($"contenthtml").as("d"))
-          .as[(String, String, String)]
-          .map { case (h, u, d) =>
-            SeenUrl(SeenFilter.urlBucket(u, hb, sl), h, u, wave, Some(d)) }
-      else
-        newArticles.toDF()
-          .select($"host", $"url").as[(String, String)]
-          .map { case (h, u) =>
-            SeenUrl(SeenFilter.urlBucket(u, hb, sl), h, u, wave, None) }
+    val seenUrlRows = SeenFilter.seenUrls(sn.newArticles.toDF(), wave,
+      cfg.hostBuckets, cfg.salt, cfg.revalidateOnRecrawl)
+    // the pool threads keep the local properties they were created
+    // with, so each write sets its own label
+    def async(write: => Unit) = Future(labelled(spark, wave, "commit")(write))(commitEc)
     val smallWrites = Seq(
       // frontier is task-batch-sized (up to maxPerHost × hosts) — keeps
       // its partitioning; genuinely host-/bucket-sized tables coalesce(1)
-      Future(store.writeNoCount(tasks.toDF(), "frontier", wave)),
-      Future(store.writeBucketed(seenUrlRows.toDF(), "seenurls", wave)),
-      Future(store.writeNoCount(newState.toDF().coalesce(1), "state", wave)),
-      Future(store.writeNoCount(newSeen.toDF().coalesce(1), "seen", wave)),
-      Future(store.writeNoCount(mCached, "metrics", wave)),
-      Future(store.writeNoCount(lineage.toDF().coalesce(1), "lineage", wave)))
+      async(store.writeNoCount(tasks.toDF(), "frontier", wave)),
+      async(store.writeBucketed(seenUrlRows.toDF(), "seenurls", wave)),
+      async(store.writeNoCount(newState.toDF().coalesce(1), "state", wave)),
+      async(store.writeNoCount(newSeen.toDF().coalesce(1), "seen", wave)),
+      async(store.writeNoCount(metrics, "metrics", wave)),
+      async(store.writeNoCount(lineage.toDF().coalesce(1), "lineage", wave)))
     // every write settles before the first failure is rethrown: the
     // caller releases the cached stages, and a write still running then
     // would rebuild one behind the release
     smallWrites.foreach(Await.ready(_, Duration.Inf))
     smallWrites.foreach(Await.result(_, Duration.Zero))
-    def g(i: Int) = if (agg.isNullAt(i)) 0L else agg.getLong(i)
-    val nArticles = g(4)
     store.commit(wave, Map(
-      "articles" -> nArticles, "frontier" -> g(0), "state" -> g(5),
+      "articles" -> result.inserted, "frontier" -> result.scheduled,
+      "state" -> hostRows,
       // under revalidation seenurls ⊋ articles (it also carries the
       // revalidated urls' fresh rows) — count not tracked there
       "seen" -> -1L,
-      "seenurls" -> (if (cfg.revalidateOnRecrawl) -1L else nArticles),
-      "metrics" -> g(5), "lineage" -> -1L))
-    WaveResult(wave, g(0), g(1), nArticles, g(2), g(3))
+      "seenurls" -> (if (cfg.revalidateOnRecrawl) -1L else result.inserted),
+      "metrics" -> hostRows, "lineage" -> -1L))
+    result
   }
 
   /** Multi-wave driver loop with resume: waves already committed in the
     * store are skipped (recomputed results read back from the snapshot),
     * so a crashed run relaunched with the same arguments produces the
     * identical store (tested in CrawlPipelineSpec). */
-  def run(
-      spark: SparkSession,
-      store: FrontierStore,
-      pagesAt: Int => Dataset[Page],
-      hosts: Dataset[HostConfig],
-      robots: Dataset[RobotsRow],
-      nWaves: Int,
+  def run(spark: SparkSession, store: FrontierStore, pagesAt: Int => Dataset[Page],
+      hosts: Dataset[HostConfig], robots: Dataset[RobotsRow], nWaves: Int,
       cfg: CrawlConfig = CrawlConfig()): Seq[WaveResult] =
     (0 until nWaves).map { w =>
       runWave(spark, store, pagesAt(w), hosts, robots, w, cfg)

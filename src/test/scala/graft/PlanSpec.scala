@@ -37,7 +37,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("pages scan is column-pruned: fetch join reads only url/html/warc_ts") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("planpages").toString
+    val tmp = TempDirs.cleanupOnExit(Files.createTempDirectory("planpages").toString)
     val pages = FixtureGen.pagesParquet(spark,
       FixtureCfg(nHosts = 12, baseArticles = 3), 0, tmp)
     // the engine's fetch-join shape: pages ⋈ broadcast(small url set)
@@ -73,7 +73,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("fetch-join broadcast gate: hinted batch broadcasts, unhinted plans a shuffle join") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("planpages2").toString
+    val tmp = TempDirs.cleanupOnExit(Files.createTempDirectory("planpages2").toString)
     val pages = graft.crawl.FixtureGen.pagesParquet(spark,
       FixtureCfg(nHosts = 12, baseArticles = 3), 0, tmp).toDF()
     val tasks = Seq(("http://u1/", "h1"), ("http://u2/", "h2"))
@@ -144,7 +144,7 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.crawl.{SeenFilter, SeenUrl, SnapshotStore, WaveEngine}
     val store = new SnapshotStore(
-      Files.createTempDirectory("planseen").toString)
+      TempDirs.cleanupOnExit(Files.createTempDirectory("planseen").toString))
     // 64 urls over 8 buckets (synthetic bucket ids — the engine computes
     // them via SeenFilter.urlBucket; here we pin the READ path)
     val rows = (0 until 64).map(i =>

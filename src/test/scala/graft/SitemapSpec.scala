@@ -76,7 +76,7 @@ class SitemapSpec extends AnyFunSuite {
       "row, gz and plain, index and urlsets") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val n = docs.count()
-    val dir = java.nio.file.Files.createTempDirectory("sitemapspec").toString
+    val dir = TempDirs.cleanupOnExit(java.nio.file.Files.createTempDirectory("sitemapspec").toString)
     Sitemap.synthesizeFromDocs(docs, dir)
     val out = Sitemap.read(spark, dir + "/*").collect()
     assert(out.count(_.getString(1) == "url") == n)

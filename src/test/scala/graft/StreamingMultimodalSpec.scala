@@ -79,11 +79,11 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       val cc = crawl.CrawlConfig(hostBuckets = 4, salt = 2,
         expectedUrlsPerBucket = 1024, cuckooCapacityPerBucket = 2048)
       val store = new crawl.SnapshotStore(
-        java.nio.file.Files.createTempDirectory("streamcrawl").toString)
+        TempDirs.cleanupOnExit(java.nio.file.Files.createTempDirectory("streamcrawl").toString))
       val mem = MemoryStream[crawl.Page]
       val q = graft.streaming.CrawlStream.start(spark, store, mem.toDS(),
         crawl.FixtureGen.hosts(spark, fx), crawl.FixtureGen.robots(spark, fx),
-        cc, java.nio.file.Files.createTempDirectory("streamck").toString,
+        cc, TempDirs.cleanupOnExit(java.nio.file.Files.createTempDirectory("streamck").toString),
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
       try {
         mem.addData(crawl.FixtureGen.pages(spark, fx, 0).collect().toSeq)

@@ -226,7 +226,7 @@ class WarcSpec extends AnyFunSuite {
         java.sql.Timestamp.valueOf("2024-01-01 00:06:00"),
         "\u4e2d\u6587 text \u20ac"))
       .toDF("url", "warc_ts", "text")
-    val dir = java.nio.file.Files.createTempDirectory("wettest").toString
+    val dir = TempDirs.cleanupOnExit(java.nio.file.Files.createTempDirectory("wettest").toString)
     Warc.writeWet(df.repartition(2), dir)
     val back = Warc.read(spark, dir + "/*").collect()
     assert(back.length == 2)
@@ -249,7 +249,7 @@ class WarcSpec extends AnyFunSuite {
         """title with "quote" and back\\slash""",
         Seq("http://a.example.org/2", "http://b.example.org/x")))
       .toDF("url", "warc_ts", "title", "links")
-    val dir = java.nio.file.Files.createTempDirectory("wattest").toString
+    val dir = TempDirs.cleanupOnExit(java.nio.file.Files.createTempDirectory("wattest").toString)
     Warc.writeWat(df, dir)
     val back = Warc.read(spark, dir + "/*").collect()
     assert(back.length == 1 && back.head.getAs[String]("rec_type") == "metadata")

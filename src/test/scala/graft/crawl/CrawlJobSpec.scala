@@ -2,7 +2,7 @@ package graft.crawl
 
 import java.nio.file.Files
 
-import graft.LocalSpark
+import graft.{LocalSpark, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives the spark-submit entry point's body ([[CrawlJob.run]])
@@ -17,7 +17,7 @@ class CrawlJobSpec extends AnyFunSuite {
     "buckets" -> "4", "salt" -> "2")
 
   test("crawl then re-run: committed waves replay from the snapshot, not recompute") {
-    val dir = Files.createTempDirectory("jobstore").toString
+    val dir = TempDirs.cleanupOnExit(Files.createTempDirectory("jobstore").toString)
     val opts = base + ("store" -> dir) + ("waves" -> "2")
     val first = CrawlJob.run(spark, opts)
     assert(first.size == 2)
@@ -29,7 +29,7 @@ class CrawlJobSpec extends AnyFunSuite {
   }
 
   test("--delete-hosts without --waves is pure maintenance: cascade runs, nothing crawled") {
-    val dir = Files.createTempDirectory("jobdel").toString
+    val dir = TempDirs.cleanupOnExit(Files.createTempDirectory("jobdel").toString)
     val results = CrawlJob.run(spark, base + ("store" -> dir) + ("waves" -> "1"))
     assert(results.size == 1)
     val store = new SnapshotStore(dir)
@@ -46,7 +46,7 @@ class CrawlJobSpec extends AnyFunSuite {
 
   test("--rerank-links + --max-tasks: the link-graph authority wins the budget") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("jobrank").toString
+    val dir = TempDirs.cleanupOnExit(Files.createTempDirectory("jobrank").toString)
     val fav = FixtureGen.hostName(5)
     val sightings = (0 until 12).map(FixtureGen.hostName)
       .filter(_ != fav).map(h => (h, fav)).toDF("src", "dst")
@@ -66,7 +66,7 @@ class CrawlJobSpec extends AnyFunSuite {
     // loading (backfilled false), not fail encoder resolution on the
     // missing nested struct field
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("jobleg").toString
+    val dir = TempDirs.cleanupOnExit(Files.createTempDirectory("jobleg").toString)
     val hostsPath = s"$dir/_hosts"
     val fx = FixtureCfg(nHosts = 12, baseArticles = 5, growthPerWave = 2,
       hotHostFactor = 2)
@@ -82,7 +82,7 @@ class CrawlJobSpec extends AnyFunSuite {
     val budget = 10
     // unbudgeted baseline on the same fixture: per-host availability
     // and rank weights for the independent Hamilton oracle below
-    val dirFree = Files.createTempDirectory("jobfree").toString
+    val dirFree = TempDirs.cleanupOnExit(Files.createTempDirectory("jobfree").toString)
     CrawlJob.run(spark, base + ("store" -> dirFree) + ("waves" -> "1"))
     val free = new SnapshotStore(dirFree).read(spark, "frontier", 0)
       .select("host", "rank").collect()
@@ -98,7 +98,7 @@ class CrawlJobSpec extends AnyFunSuite {
       h -> (baseQ(h) + (if (bonus(h)) 1L else 0L))).toMap
     assert(alloc.values.sum == budget, "Hamilton quotas must conserve")
 
-    val dir = Files.createTempDirectory("jobapp").toString
+    val dir = TempDirs.cleanupOnExit(Files.createTempDirectory("jobapp").toString)
     val r = CrawlJob.run(spark, base + ("store" -> dir) + ("waves" -> "1")
       + ("max-tasks" -> budget.toString) + ("apportion" -> "true"))
     val sched = new SnapshotStore(dir).read(spark, "frontier", 0)

@@ -2,7 +2,7 @@ package graft.crawl
 
 import java.nio.file.Files
 
-import graft.LocalSpark
+import graft.{LocalSpark, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end equivalence of the distributed wave engine against the
@@ -19,10 +19,10 @@ class CrawlPipelineSpec extends AnyFunSuite {
   val nWaves = 3
 
   private def newStore(): SnapshotStore =
-    new SnapshotStore(Files.createTempDirectory("crawlstore").toString)
+    new SnapshotStore(TempDirs.cleanupOnExit(Files.createTempDirectory("crawlstore").toString))
 
   private lazy val pagesDir =
-    Files.createTempDirectory("crawlpages").toString
+    TempDirs.cleanupOnExit(Files.createTempDirectory("crawlpages").toString)
 
   private def runAll(store: SnapshotStore, waves: Int): Seq[WaveEngine.WaveResult] =
     WaveEngine.run(spark, store,

@@ -3,7 +3,7 @@ package graft.crawl
 import java.nio.file.Files
 import java.time.LocalDateTime
 
-import graft.LocalSpark
+import graft.{LocalSpark, TempDirs}
 import graft.core.{CatalogItem, RobotsPolicy}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,10 +22,10 @@ class WaveEdgeSpec extends AnyFunSuite {
     expectedUrlsPerBucket = 2048, cuckooCapacityPerBucket = 4096)
 
   private def newStore(): SnapshotStore =
-    new SnapshotStore(Files.createTempDirectory("edgestore").toString)
+    new SnapshotStore(TempDirs.cleanupOnExit(Files.createTempDirectory("edgestore").toString))
 
   private lazy val pagesDir =
-    Files.createTempDirectory("edgepages").toString
+    TempDirs.cleanupOnExit(Files.createTempDirectory("edgepages").toString)
 
   private def runAll(store: SnapshotStore, waves: Int,
       cfg: CrawlConfig = cc): Seq[WaveEngine.WaveResult] =
@@ -391,7 +391,7 @@ class WaveEdgeSpec extends AnyFunSuite {
       (SeenFilter.bucket(h, u, lcc.hostBuckets, lcc.salt), u) })
     val legacySeen = SeenFilter.updateSketches(legacyPairs,
       spark.emptyDataset[SeenSketch], lcc.cuckooCapacityPerBucket,
-      lcc.expectedUrlsPerBucket, lcc.bloomFpp).collect()
+      lcc.expectedUrlsPerBucket, SeenFilter.BloomFpp).collect()
     def rmTree(p: String): Unit =
       if (JFiles.exists(JPaths.get(p)))
         JFiles.walk(JPaths.get(p)).sorted(Comparator.reverseOrder[java.nio.file.Path]())
@@ -932,7 +932,7 @@ class WaveEdgeSpec extends AnyFunSuite {
     // one of the concurrent small-table writes fails; the articles
     // write before it has already materialized the shared stages
     val failing = new SnapshotStore(
-        Files.createTempDirectory("edgefail").toString) {
+        TempDirs.cleanupOnExit(Files.createTempDirectory("edgefail").toString)) {
       override def writeNoCount(df: DataFrame, table: String, wave: Int): Unit =
         if (table == "state") throw new java.io.IOException("injected state write failure")
         else super.writeNoCount(df, table, wave)
@@ -947,6 +947,87 @@ class WaveEdgeSpec extends AnyFunSuite {
       s"persisted RDDs left: ${spark.sparkContext.getPersistentRDDs.keys}")
     assert(spark.sharedState.cacheManager.isEmpty,
       "a cached wave stage outlived the failed wave")
+  }
+  test("every wave job carries its stage label; the caller's description is restored") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val host = "label.example.com"
+    val hosts = spark.createDataset(Seq(
+      HostConfig(1, host, s"http://$host/", 1, enabled = true, 100L, 1)))
+    val robots = spark.createDataset(Seq(FixtureGen.RobotsRow(host, "")))
+    val ts = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
+    val body = ("<html><body><h1>Story</h1><div>" + (0 until 5).map(k =>
+      s"<p>Report number $k brings further detail about the situation, " +
+        "and the description keeps going with additional sentences so " +
+        "the density scan of the extractor sees real content.</p>")
+      .mkString + "</div></body></html>").getBytes("UTF-8")
+    // equal dates keep the catalog's own order: rotating it re-exposes
+    // expired items, so wave 1 runs the revalidation and eviction reads
+    def pages(order: Seq[String]) = spark.createDataset(Page(s"http://$host/", ts,
+      ("<html><body><ul>" + order.map(u =>
+        s"""<li><a href="http://$host/a/$u.html">Story item $u</a>""" +
+          """<span>2024-02-01 10:00</span></li>""").mkString
+        + "</ul></body></html>").getBytes("UTF-8"), "", "en") +:
+      order.map(u => Page(s"http://$host/a/$u.html", ts, body, "", "en")))
+    val cfg = cc.copy(recrawlAfterWaves = 1, revalidateOnRecrawl = true)
+    val s = newStore()
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        started.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")); ()
+      }
+    }
+    // runs one wave under the caller's own description and returns the
+    // description of every job the wave started
+    def waveLabels(w: Int, order: Seq[String]): Seq[String] = {
+      val in = pages(order)
+      started.clear()
+      sc.setJobDescription("caller's own")
+      try {
+        WaveEngine.runWave(spark, s, in, hosts, robots, w, cfg)
+        assert(sc.getLocalProperty("spark.job.description") == "caller's own",
+          "runWave must restore the caller's job description")
+      } finally sc.setJobDescription(null)
+      // the listener bus is FIFO: once a marker job started after the
+      // wave is delivered, every job of the wave has been delivered too
+      sc.setJobDescription("label-drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 10000L
+      while (!started.contains("label-drain") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(started.contains("label-drain"), "listener bus did not drain")
+      started.asScala.toSeq.takeWhile(_ != "label-drain")
+    }
+    val stageNames = Set("seed", "homes", "schedule", "articles", "seen",
+      "rollup", "commit")
+    sc.addSparkListener(listener)
+    val (bulk, incremental, resumed) =
+      try (waveLabels(0, Seq("a", "b", "c")), waveLabels(1, Seq("b", "c", "a")),
+        waveLabels(1, Seq("b", "c", "a")))
+      finally sc.removeSparkListener(listener)
+    def stageOf(w: Int, d: String): String = {
+      val m = s"wave=$w stage=(\\w+)".r.unapplySeq(d)
+      assert(m.isDefined, s"wave $w job without a stage label: '$d'")
+      m.get.head
+    }
+    for ((w, jobs) <- Seq(0 -> bulk, 1 -> incremental)) {
+      val names = jobs.map(stageOf(w, _))
+      assert(names.forall(stageNames), s"unknown stage in ${names.distinct}")
+      // the articles write, the totals and the six concurrent writes
+      assert(names.count(_ == "commit") >= 8,
+        s"wave $w: the concurrent commit writes must carry the label too")
+    }
+    assert(resumed.nonEmpty && resumed.forall(stageOf(1, _) == "resume"))
+    // Jobs per wave at the parent commit, which counted the task batch
+    // twice (once for the broadcast gate, once for the unique-fetch
+    // check), measured with this listener on these same three waves:
+    // bulk 24, incremental 38, resumed 2. The resumed wave never counts
+    // tasks, so it only must not grow.
+    assert(bulk.size <= 24 - 1, s"bulk wave ran ${bulk.size} jobs")
+    assert(incremental.size <= 38 - 1, s"incremental wave ran ${incremental.size} jobs")
+    assert(resumed.size <= 2, s"resumed wave ran ${resumed.size} jobs")
   }
 }
 
